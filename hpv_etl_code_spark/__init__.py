@@ -41,6 +41,7 @@ def __getattr__(name):  # lazy — operator modules need an active JVM only at u
         "overwrite_parquet": ("hpv_etl_code_spark.sources.sinks", "overwrite_parquet"),
         "overwrite_jdbc": ("hpv_etl_code_spark.sources.sinks", "overwrite_jdbc"),
         "read_jdbc": ("hpv_etl_code_spark.sources.sinks", "read_jdbc"),
+        "read_sheets": ("hpv_etl_code_spark.sources.sheets", "read_sheets"),
         "read_sheets_csv": ("hpv_etl_code_spark.sources.sheets", "read_sheets_csv"),
         "read_sheets_excel": (
             "hpv_etl_code_spark.sources.sheets",

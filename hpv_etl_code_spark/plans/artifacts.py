@@ -58,18 +58,18 @@ _DIR_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
 _REUSE_ENV = "SPARK_GRAFT_ARTIFACT_REUSE"
 _STRATEGIES = ("checkpoint", "memory", "parquet", "none")
 
-# (applicationId, name, fingerprint-or-content-key) → materialized frame
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# (applicationId, name, fingerprint-or-content-key, storage) → frame
+_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
 # Serializes build-and-insert per key so two threads staging the same
 # artifact never double-build (the same race the recursive-CTE conf
 # override was locked against in round 6). One global mutex guards the
 # dicts; the per-key lock is held across the (possibly long) build so
 # DIFFERENT artifacts still build concurrently.
 _CACHE_MUTEX = threading.Lock()
-_KEY_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+_KEY_LOCKS: dict[tuple[str, ...], threading.Lock] = {}
 
 
-def _key_lock(key: tuple[str, str, str]) -> threading.Lock:
+def _key_lock(key: tuple[str, ...]) -> threading.Lock:
     with _CACHE_MUTEX:
         return _KEY_LOCKS.setdefault(key, threading.Lock())
 
@@ -80,11 +80,14 @@ def stage_storage(spark=None) -> str:
     ``local[*]`` master defaults to ``checkpoint`` (the single JVM dies
     with its executor anyway, so checkpoint's no-lineage blocks lose
     nothing and the plan truncation is pure win), while a CLUSTER
-    master defaults to ``parquet`` — ``localCheckpoint`` blocks are
+    master (``local-cluster[...]`` included: its executors are separate
+    JVMs) defaults to ``parquet`` — ``localCheckpoint`` blocks are
     unrecoverable on executor loss, so a default that lands on a real
-    cluster must be the durable one. Unknown values fail loudly — a
-    typo silently degrading to recompute-per-branch would be a 100 TB
-    performance bug."""
+    cluster must be the durable one — or to ``memory`` when
+    ``$SPARK_GRAFT_ARTIFACT_DIR`` is unset, since parquet artifacts in a
+    node-local tempdir are unreadable from the other nodes. Unknown
+    values fail loudly — a typo silently degrading to
+    recompute-per-branch would be a 100 TB performance bug."""
     s = os.environ.get(_STORAGE_ENV)
     if s is not None:
         if s not in _STRATEGIES:
@@ -99,9 +102,11 @@ def stage_storage(spark=None) -> str:
             SparkSession.getActiveSession()
             or SparkSession._instantiatedSession
         )
-    if spark is not None and not spark.sparkContext.master.startswith("local"):
-        return "parquet"
-    return "checkpoint"
+    if spark is None or re.match(r"local(\[|$)", spark.sparkContext.master):
+        return "checkpoint"
+    # parquet needs storage every node shares; the tempdir fallback of
+    # _scratch_dir is node-local, so without one stay lineage-backed
+    return "parquet" if os.environ.get(_DIR_ENV) else "memory"
 
 
 def stage_artifact(
@@ -127,7 +132,7 @@ def stage_artifact(
     # deterministic plans with equal text produce equal rows, so a
     # fingerprint hit is a true content hit
     fp = _plan_fingerprint(df)
-    key = (spark.sparkContext.applicationId, name, fp)
+    key = (spark.sparkContext.applicationId, name, fp, storage)
     if key in _CACHE:
         return _CACHE[key]
     with _key_lock(key):
@@ -165,7 +170,7 @@ def stage_artifact_from(
     storage = stage_storage(spark) if storage is None else storage
     if storage == "none":
         return builder()
-    key = (spark.sparkContext.applicationId, name, f"ck:{content_key}")
+    key = (spark.sparkContext.applicationId, name, f"ck:{content_key}", storage)
     if key in _CACHE:
         return _CACHE[key]
     with _key_lock(key):

@@ -1,16 +1,18 @@
 """The reference-parity HPV coverage pipeline, Spark-first.
 
 End-to-end re-expression of ``/root/reference/src/main.py`` (the whole
-205-line pandas ETL) as one lazy DataFrame plan:
+205-line pandas ETL) as one lazy DataFrame plan over MELTED sheet cells
+(``sources/sheets.py::MELTED_SCHEMA``, one row per data cell, the A1
+text carried per row):
 
-  wide sheet(s)                                 (main.py:27, per file)
+  melted cells of every file                    (main.py:27-45 + :77;
+                                                 the reader or
+                                                 run_pipeline's adapter)
+    → drop '%' / '2 doses' categories           (main.py:40-42)
     → trim/initcap borough                      (main.py:36-37)
-    → drop '%' / '2 doses' columns by name      (main.py:40-42)
-    → unpivot to (Category, Value)              (main.py:45)
     → derive YearGroup / Gender / Metric        (main.py:48-50)
+    → A1-derived academic year + extract date   (main.py:60-70)
     → pivot Metric → measure columns            (main.py:53)
-    → attach A1-derived academic year + date    (main.py:60-70)
-    → union files by name                       (main.py:77)
     → drop null-measure rows, sentinels → NULL  (main.py:80-83)
     → CUBE(Gender='Both', YearGroup='All') base ∪ rollups
                                                 (main.py:87-119, one pass
@@ -18,11 +20,11 @@ End-to-end re-expression of ``/root/reference/src/main.py`` (the whole
     → UPPERCASE columns, fixed 8-col schema     (main.py:120,
                                                  docs/Create HPV Table.sql:1-10)
 
-Scale story: every stage before the rollup is narrow (no shuffle); the
-rollup is the single exchange; file parallelism comes from the scan, so
-10 files or 10 million behave identically. No collect() anywhere — the
-A1 metadata enters as a literal per source (the reference's header-cell
-read is driver-side there too, main.py:30,60).
+Scale story: every stage before the pivot is narrow (no shuffle); the
+pivot and the rollup are the only exchanges; file parallelism comes
+from the scan, so 10 files or 10 million behave identically. No
+collect() anywhere — the A1 metadata travels as a column (the
+reference's header-cell read is driver-side, main.py:30,60).
 
 Documented divergences from the reference (all strictly more defined):
 - ``initcap`` vs pandas ``str.title()`` on non-letter boundaries (F2).
@@ -36,13 +38,14 @@ Documented divergences from the reference (all strictly more defined):
 from __future__ import annotations
 
 import datetime as dt
+import functools
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.cleaning import initcap_trim, regexp_extract_null, sentinels_to_null
-from ..operators.reshape import unpivot
 from ..operators.rollup import cube_rollup_labeled
 
 ID_COL = "Local authority"
@@ -60,53 +63,40 @@ FINAL_COLUMNS = (
 )
 
 
-def drop_columns_by_name(df: DataFrame, *needles: str) -> DataFrame:
-    """Schema-level projection: drop columns whose NAME contains a needle
-    (reference main.py:40-42). Lazy schemas make the same trick free."""
-    doomed = [c for c in df.columns if any(n in c for n in needles)]
-    return df.drop(*doomed)
+def academic_year_meta(a1_text: Column) -> tuple[Column, Column]:
+    """A1 header text → (end-year int, academic-year text) as Columns.
+
+    The reference does this driver-side on the collected cell value
+    (main.py:60-67); here it is a per-row expression over the A1 text
+    the sheet reader carries. No-match → NULLs (total semantics vs the
+    reference's missing column).
+    """
+    year_end = F.try_element_at(F.split(F.trim(a1_text), " "), F.lit(-1)).try_cast("int")
+    year_text = regexp_extract_null(a1_text, ACADEMIC_YEAR_RE)
+    return year_end, year_text
 
 
-def derive_dimensions(
-    long_df: DataFrame,
-    borough_col: str = ID_COL,
-    category_col: str = "Category",
-    value_col: str = "Value",
-) -> DataFrame:
-    """Melted rows → dimension columns (reference main.py:36-50): borough
-    trim/initcap, year-group digits, gender/metric containment mapping.
-    Category-name predicates (% / 2 doses) are applied here as row
-    filters so melted sources (e.g. the CSV sheet reader, which emits
-    long form directly) share the exact same semantics as the wide path."""
-    cat = F.col(category_col)
-    return (
-        long_df.filter(~cat.contains("%") & ~cat.contains("2 doses"))
-        .select(
-            initcap_trim(borough_col).alias("Borough_Name"),
-            regexp_extract_null(cat, r"(\d+)").alias("Year_Group_Number"),
-            F.when(cat.contains("females"), F.lit("Female"))
-            .otherwise(F.lit("Male"))
-            .alias("Gender_Name"),
-            F.when(F.lower(cat).contains("vaccinated"), F.lit("Number_Vaccinated"))
-            .otherwise(F.lit("Number"))
-            .alias("Metric"),
-            F.col(value_col).alias("Value"),
-            *[c for c in long_df.columns if c in ("Academic_Year_End_Date",
-                                                   "Academic_Year_Text",
-                                                   "Date_Extract", "__a1_text")],
-        )
+def derive_dimensions(melted: DataFrame, extract_date: dt.date) -> DataFrame:
+    """Melted cells → dimension columns (reference main.py:36-70): the
+    '%' / '2 doses' category drops, borough trim/initcap, year-group
+    digits, gender/metric containment mapping, A1-derived academic
+    year and the extract date."""
+    cat = F.col("Category")
+    year_end, year_text = academic_year_meta(F.col("__a1_text"))
+    return melted.filter(~cat.contains("%") & ~cat.contains("2 doses")).select(
+        initcap_trim(ID_COL).alias("Borough_Name"),
+        regexp_extract_null(cat, r"(\d+)").alias("Year_Group_Number"),
+        F.when(cat.contains("females"), F.lit("Female"))
+        .otherwise(F.lit("Male"))
+        .alias("Gender_Name"),
+        F.when(F.lower(cat).contains("vaccinated"), F.lit("Number_Vaccinated"))
+        .otherwise(F.lit("Number"))
+        .alias("Metric"),
+        F.col("Value"),
+        year_end.alias("Academic_Year_End_Date"),
+        year_text.alias("Academic_Year_Text"),
+        F.lit(extract_date).cast("date").alias("Date_Extract"),
     )
-
-
-def normalize_wide_sheet(df: DataFrame, id_col: str = ID_COL) -> DataFrame:
-    """One wide sheet → long (Borough, Year_Group, Gender, Metric, Value).
-
-    Column drops by NAME (main.py:40-42) happen schema-side here; the
-    equivalent category-name filter in derive_dimensions is a no-op on
-    what remains (same predicate, same result)."""
-    df = drop_columns_by_name(df, "%", "2 doses")
-    long_df = unpivot(df, [id_col], None, "Category", "Value")
-    return derive_dimensions(long_df, borough_col=id_col)
 
 
 PIVOT_KEYS = (
@@ -135,48 +125,6 @@ def pivot_measures(long_df: DataFrame) -> DataFrame:
             {"Number": "Students_Total", "Number_Vaccinated": "Students_Vaccinated"}
         )
     )
-
-
-def academic_year_meta(a1_text: str | None | Column) -> tuple[Column, Column]:
-    """A1 header text → (end-year int, academic-year text) as Columns.
-
-    The reference does this driver-side on the collected cell value
-    (main.py:60-67); the same expressions work on a literal — or on a
-    per-row Column when the source carries the A1 text as a column (the
-    distributed CSV sheet reader). No-match → NULLs (total semantics vs
-    the reference's missing column).
-    """
-    lit = a1_text if isinstance(a1_text, Column) else F.lit(a1_text)
-    year_end = F.try_element_at(F.split(F.trim(lit), " "), F.lit(-1)).try_cast("int")
-    year_text = regexp_extract_null(lit, ACADEMIC_YEAR_RE)
-    return year_end, year_text
-
-
-def process_wide_file(
-    df: DataFrame,
-    a1_text: str | None,
-    extract_date: dt.date,
-    id_col: str = ID_COL,
-) -> DataFrame:
-    """Normalize one wide sheet to LONG form with its per-file metadata
-    attached — entirely narrow (no shuffle); the single shared pivot
-    happens after the union."""
-    year_end, year_text = academic_year_meta(a1_text)
-    return (
-        normalize_wide_sheet(df, id_col)
-        .withColumn("Academic_Year_End_Date", year_end)
-        .withColumn("Academic_Year_Text", year_text)
-        .withColumn("Date_Extract", F.lit(extract_date).cast("date"))
-    )
-
-
-def combine_files(dfs: Sequence[DataFrame]) -> DataFrame:
-    """UNION ALL by column name with null-fill (pandas concat parity,
-    reference main.py:77)."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
 
 
 def clean_measures(df: DataFrame) -> DataFrame:
@@ -215,17 +163,34 @@ def finalize(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.upper() for c in df.columns]).select(*FINAL_COLUMNS)
 
 
+def melted_to_final(melted: DataFrame, extract_date: dt.date) -> DataFrame:
+    """Melted cells (``MELTED_SCHEMA``, any number of files) → the final
+    8-column frame: narrow derive → one pivot → one grouping-sets
+    rollup. Shuffle topology is file-count independent; the reference
+    executes 2 + 3N pandas materializations for the same result."""
+    return finalize(
+        rollup_cube(clean_measures(pivot_measures(derive_dimensions(melted, extract_date))))
+    )
+
+
 def run_pipeline(
     files: Sequence[tuple[DataFrame, str | None]],
     extract_date: dt.date,
 ) -> DataFrame:
-    """The whole reference ETL as one lazy plan over N wide sheets.
-
-    Shuffle topology is file-count independent: N × (narrow melt) →
-    union → ONE pivot exchange → ONE grouping-sets exchange. The
-    reference executes 2 + 3N pandas materializations for the same
-    result."""
-    per_file = [process_wide_file(df, a1, extract_date) for df, a1 in files]
-    return finalize(
-        rollup_cube(clean_measures(pivot_measures(combine_files(per_file))))
-    )
+    """The whole reference ETL over N wide in-memory sheets, each paired
+    with its A1 text: melt every frame into the ``MELTED_SCHEMA`` shape
+    the sheet reader emits (measures cast to string, as parsed cells
+    are) and run :func:`melted_to_final` on their union."""
+    melted = [
+        df.to(StructType([StructField(c, StringType()) for c in df.columns]))
+        .unpivot([ID_COL], None, "Category", "Value")
+        .select(
+            F.lit(None).cast("string").alias("source_file"),
+            F.lit(a1).cast("string").alias("__a1_text"),
+            ID_COL,
+            "Category",
+            "Value",
+        )
+        for df, a1 in files
+    ]
+    return melted_to_final(functools.reduce(DataFrame.union, melted), extract_date)

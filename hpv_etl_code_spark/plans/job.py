@@ -14,20 +14,11 @@ import datetime as dt
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from ..sources.sheets import read_sheets_csv, read_sheets_excel
+from ..sources.sheets import read_sheets
 from ..sources.sinks import overwrite_parquet
-from .hpv_pipeline import (
-    PIVOT_KEYS,
-    academic_year_meta,
-    clean_measures,
-    derive_dimensions,
-    finalize,
-    pivot_measures,
-    rollup_cube,
-)
+from .hpv_pipeline import melted_to_final
 
 
 @dataclass(frozen=True)
@@ -59,32 +50,11 @@ class JobConfig:
         )
 
 
-def melted_to_final(melted: DataFrame, extract_date: dt.date) -> DataFrame:
-    """Melted source rows (with per-row A1 text) → final 8-column frame,
-    same plan shape as run_pipeline: narrow derive → one pivot → one
-    grouping-sets rollup."""
-    year_end, year_text = academic_year_meta(F.col("__a1_text"))
-    derived = (
-        derive_dimensions(melted)
-        .withColumn("Academic_Year_End_Date", year_end)
-        .withColumn("Academic_Year_Text", year_text)
-        .withColumn("Date_Extract", F.lit(extract_date).cast("date"))
-        .drop("__a1_text")
-    )
-    return finalize(rollup_cube(clean_measures(pivot_measures(derived))))
-
-
 def run_hpv_job(spark: SparkSession, config: JobConfig) -> int:
     """Discover → transform → truncate-load; returns rows written (the
     reference prints this count, database_util.py:54)."""
-    # format from the glob — .xlsx files go through the stdlib Excel
-    # parser (the reference's actual input format), anything else CSV
-    reader = (
-        read_sheets_excel
-        if config.data_glob.lower().endswith((".xlsx", ".xlsx}"))
-        else read_sheets_csv
-    )
-    melted = reader(spark, config.data_glob)
+    # each file's parser follows its own extension (sheets.parse_sheet)
+    melted = read_sheets(spark, config.data_glob)
     final = melted_to_final(melted, config.extract_date)
     if config.incremental_by_year:
         return overwrite_parquet(

@@ -17,6 +17,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# the directory holding this package: Python workers import it from
+# here whatever the driver's working directory or PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "hpv_etl_code_spark",
@@ -32,6 +36,9 @@ def get_spark(
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle and are cluster-location independent.
     - Arrow enabled for the (few) pandas-UDF paths.
+    - Python workers get this package's parent directory on their
+      PYTHONPATH, so a driver started from any directory can run the
+      package's Python UDFs (a path absent on a node is ignored there).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -60,6 +67,7 @@ def get_spark(
         # cache locality. Override with SPARK_GRAFT_DRIVER_MEM.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

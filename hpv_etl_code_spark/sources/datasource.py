@@ -1,94 +1,38 @@
-"""`hpv_sheets` — the sheet contract as a first-class Spark data source.
+"""`hpv_sheets` — the sheet contract as a Spark streaming source.
 
 Reference analog: the glob-discover + per-file pandas read loop
 (``/root/reference/src/main.py:17-30``). Here the same contract (cell A1
 metadata, headers on row 3, data from row 4 — ``README.md:46-57``) is a
-registered Python Data Source (Spark 4 ``pyspark.sql.datasource``), so a
-user writes plain reader syntax instead of calling library functions:
+registered Python Data Source (Spark 4 ``pyspark.sql.datasource``), so
+newly-dropped sheets become micro-batches with plain reader syntax:
 
     spark.dataSource.register(HpvSheetsDataSource)
-    df = spark.read.format("hpv_sheets").load("/data/*.xlsx")         # batch
-    s  = spark.readStream.format("hpv_sheets").load("/drop/*.xlsx")   # stream
+    s = spark.readStream.format("hpv_sheets").load("/drop/*.xlsx")
 
-Both return the same melted frame as ``sources/sheets.py``
-(``MELTED_SCHEMA``: source_file, __a1_text, Local authority, Category,
-Value) and reuse its stdlib parsers — one code path for cell semantics,
-three transports (binaryFile+mapInPandas, batch source, stream source).
+It returns the same melted frame as the batch reader
+``sources/sheets.py::read_sheets`` (``MELTED_SCHEMA``: source_file,
+__a1_text, Local authority, Category, Value) and parses each file with
+the same :func:`~.sheets.parse_sheet` — one code path for cell
+semantics, two transports (binaryFile+mapInPandas for batch, this
+source for streaming).
 
-Scale notes:
-
-- Batch: ``partitions()`` lists matching files (metadata only — names,
-  not contents) and hands ONE file per :class:`InputPartition`;
-  executors open and parse their own files in parallel, so ingest
-  scales with file count like any splittable source. A grossly
-  oversized single sheet is the one non-splittable unit — true of every
-  spreadsheet reader; the contract's files are small by construction.
-- Stream: :class:`SimpleDataSourceStreamReader` (driver-side reads, the
-  documented fit for low-volume sources — spreadsheet drops are that).
-  The offset is the lexicographically-largest file name consumed, so
-  drops must arrive with non-decreasing names (e.g. date-stamped
-  exports); ``readBetweenOffsets`` replays any (start, end] range
-  bit-identically for checkpoint recovery.
+Stream: :class:`SimpleDataSourceStreamReader` (driver-side reads, the
+documented fit for low-volume sources — spreadsheet drops are that).
+The offset is the lexicographically-largest file name consumed, so
+drops must arrive with non-decreasing names (e.g. date-stamped
+exports); ``readBetweenOffsets`` replays any (start, end] range
+bit-identically for checkpoint recovery.
 """
 
 from __future__ import annotations
 
 import glob as _glob
-import os
-from collections.abc import Iterator, Sequence
-from dataclasses import dataclass
+from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from .sheets import MELTED_SCHEMA, _parse_sheet_csv, _parse_sheet_xlsx
-
-
-def _parser_for(fmt: str):
-    if fmt == "xlsx":
-        return _parse_sheet_xlsx
-    if fmt == "csv":
-        return _parse_sheet_csv
-    raise ValueError(f"hpv_sheets: unknown format {fmt!r} (want 'csv' or 'xlsx')")
-
-
-def _resolve(options) -> tuple[str, str]:
-    """(glob_path, format) from reader options; format defaults from the
-    glob's extension so `.load('/x/*.xlsx')` needs no extra option."""
-    path = options.get("path")
-    if not path:
-        raise ValueError("hpv_sheets: a path is required — .load('/dir/*.xlsx')")
-    fmt = options.get("format")
-    if not fmt:
-        ext = os.path.splitext(path)[1].lstrip(".").lower()
-        fmt = ext or "xlsx"
-    _parser_for(fmt)  # validate eagerly, on the driver
-    return path, fmt
-
-
-@dataclass
-class _FilePartition(InputPartition):
-    path: str
-    fmt: str
-
-
-class _SheetsBatchReader(DataSourceReader):
-    def __init__(self, options) -> None:
-        self._path, self._fmt = _resolve(options)
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # names only — contents are opened executor-side in read()
-        return [_FilePartition(p, self._fmt) for p in sorted(_glob.glob(self._path))]
-
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        with open(partition.path, "rb") as f:
-            raw = f.read()
-        yield from _parser_for(partition.fmt)(partition.path, raw)
+from .sheets import MELTED_SCHEMA, parse_sheet
 
 
 class _SheetsStreamReader(SimpleDataSourceStreamReader):
@@ -99,7 +43,11 @@ class _SheetsStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options) -> None:
-        self._path, self._fmt = _resolve(options)
+        self._path = options.get("path")
+        if not self._path:
+            raise ValueError(
+                "hpv_sheets: a path is required — .load('/dir/*.xlsx')"
+            )
 
     def _files_after(self, last: str, until: str | None = None) -> list[str]:
         names = sorted(_glob.glob(self._path))
@@ -112,12 +60,11 @@ class _SheetsStreamReader(SimpleDataSourceStreamReader):
         # copy.copy()s the returned iterator for replay, and generators
         # aren't copyable. Driver-side materialization is the documented
         # SimpleDataSourceStreamReader trade-off (low-volume sources).
-        parser = _parser_for(self._fmt)
         rows: list[tuple] = []
         for p in paths:
             with open(p, "rb") as f:
                 raw = f.read()
-            rows.extend(parser(p, raw))
+            rows.extend(parse_sheet(p, raw))
         return iter(rows)
 
     def initialOffset(self) -> dict:
@@ -142,9 +89,6 @@ class HpvSheetsDataSource(DataSource):
 
     def schema(self) -> StructType:
         return MELTED_SCHEMA
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _SheetsBatchReader(self.options)
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
         return _SheetsStreamReader(self.options)

@@ -19,14 +19,15 @@ Both formats are native: CSV (layout mirrors the sheet contract) and
 real ``.xlsx`` — parsed with a dependency-free stdlib reader
 (``zipfile`` + ``ElementTree``; xlsx IS zip-of-XML), covering the cell
 types the contract produces (shared strings, inline strings, numbers,
-rich-text runs). Same binaryFile + mapInPandas pipeline, same melted
-output — ``run_hpv_job`` picks the parser from the glob extension.
+rich-text runs). :func:`parse_sheet` picks the parser from each file's
+own extension, so one glob may mix both formats.
 """
 
 from __future__ import annotations
 
 import csv
 import io
+import os
 import re
 import zipfile
 from collections.abc import Iterator
@@ -197,12 +198,27 @@ def _parse_sheet_xlsx(path: str, raw: bytes) -> Iterator[tuple]:
     yield from _melt_grid(path, grid)
 
 
-def _read_sheets(spark: SparkSession, glob_path: str, parser) -> DataFrame:
+_PARSERS = {".csv": _parse_sheet_csv, ".xlsx": _parse_sheet_xlsx}
+
+
+def parse_sheet(path: str, raw: bytes) -> Iterator[tuple]:
+    """One sheet file → melted cells, the parser chosen by the file's
+    own extension (``.xlsx`` or ``.csv``); anything else is an error
+    naming the file, never a mis-decode."""
+    ext = os.path.splitext(path)[1].lower()
+    if ext not in _PARSERS:
+        raise ValueError(f"{path}: not a sheet file (want .xlsx or .csv)")
+    return _PARSERS[ext](path, raw)
+
+
+def read_sheets(spark: SparkSession, glob_path: str) -> DataFrame:
     """Glob → melted long frame, fully executor-side.
 
     binaryFile gives (path, modificationTime, length, content); the
     parser runs per Arrow batch. Each file's bytes must fit an executor
-    task comfortably — always true for spreadsheet-shaped inputs.
+    task comfortably — always true for spreadsheet-shaped inputs. The
+    A1 double-read of the reference (``src/main.py:27,30``) stays fused
+    into the single pass.
     """
     files = spark.read.format("binaryFile").load(glob_path)
 
@@ -210,7 +226,7 @@ def _read_sheets(spark: SparkSession, glob_path: str, parser) -> DataFrame:
         for pdf in batches:
             out: list[tuple] = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                out.extend(parser(path, bytes(content)))
+                out.extend(parse_sheet(path, bytes(content)))
             yield pd.DataFrame(
                 out, columns=[f.name for f in MELTED_SCHEMA.fields]
             )
@@ -218,14 +234,5 @@ def _read_sheets(spark: SparkSession, glob_path: str, parser) -> DataFrame:
     return files.select("path", "content").mapInPandas(parse, MELTED_SCHEMA)
 
 
-def read_sheets_csv(spark: SparkSession, glob_path: str) -> DataFrame:
-    return _read_sheets(spark, glob_path, _parse_sheet_csv)
-
-
-def read_sheets_excel(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Excel twin of read_sheets_csv — the reference's ACTUAL input
-    format (``/root/reference/src/main.py:27``), parsed with the stdlib
-    xlsx reader above (no openpyxl needed). Same pipeline, same melted
-    schema; the A1 double-read of the reference (``:30``) stays fused
-    into the single pass."""
-    return _read_sheets(spark, glob_path, _parse_sheet_xlsx)
+# names perfbench, tests and the package surface call; any mix of formats
+read_sheets_csv = read_sheets_excel = read_sheets

@@ -130,14 +130,37 @@ def test_default_storage_is_deploy_mode_aware(spark, monkeypatch):
             self.sparkContext = _Ctx(master)
 
     monkeypatch.delenv("SPARK_GRAFT_STAGE_STORAGE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", "/shared/artifacts")
     assert stage_storage(_Stub("local[32]")) == "checkpoint"
     assert stage_storage(_Stub("local[*]")) == "checkpoint"
+    assert stage_storage(_Stub("local")) == "checkpoint"
     assert stage_storage(_Stub("spark://host:7077")) == "parquet"
     assert stage_storage(_Stub("yarn")) == "parquet"
     assert stage_storage(_Stub("k8s://https://host:443")) == "parquet"
+    # a local-cluster master runs separate executor JVMs: cluster branch
+    assert stage_storage(_Stub("local-cluster[2,1,1024]")) == "parquet"
     assert stage_storage(spark) == "checkpoint"  # the test session is local
+    # no shared artifact dir: parquet would land in a node-local tempdir
+    monkeypatch.delenv("SPARK_GRAFT_ARTIFACT_DIR")
+    assert stage_storage(_Stub("yarn")) == "memory"
+    assert stage_storage(_Stub("local-cluster[2,1,1024]")) == "memory"
+    assert stage_storage(_Stub("local[4]")) == "checkpoint"
     monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "memory")
     assert stage_storage(_Stub("yarn")) == "memory"
+
+
+def test_cache_key_includes_resolved_storage(spark, monkeypatch):
+    """Changing the strategy mid-session must stage a new frame, not
+    serve the one materialized under the old strategy."""
+    df = spark.range(5).withColumn("v", F.col("id") * 7)
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "memory")
+    persisted = stage_artifact(df, "storage_key")
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "checkpoint")
+    checkpointed = stage_artifact(df, "storage_key")
+    assert checkpointed is not persisted
+    assert "InMemoryTableScan" in persisted._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in checkpointed._jdf.queryExecution().executedPlan().toString()
+    assert stage_artifact(df, "storage_key") is checkpointed
 
 
 def test_clear_cache_keeps_checkpoint_blocks_alive_for_holders(spark):

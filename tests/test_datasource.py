@@ -1,6 +1,6 @@
-"""The `hpv_sheets` Python Data Source (sources/datasource.py): reader
-syntax must be a third route to the same melted rows as the
-binaryFile+mapInPandas route, batch and streaming."""
+"""The `hpv_sheets` Python Data Source (sources/datasource.py): the
+streaming reader must yield the same melted rows as the batch
+binaryFile+mapInPandas route."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 
 from hpv_etl_code_spark.plans import hpv_fixture
 from hpv_etl_code_spark.sources.datasource import HpvSheetsDataSource
-from hpv_etl_code_spark.sources.sheets import read_sheets_csv, read_sheets_excel
+from hpv_etl_code_spark.sources.sheets import read_sheets_excel
 
 
 def _key(rows):
@@ -21,50 +21,6 @@ def _key(rows):
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
     spark.dataSource.register(HpvSheetsDataSource)
-
-
-@pytest.fixture()
-def xlsx_dir(tmp_path):
-    from tests.xlsx_util import write_xlsx
-
-    for i, (cols, rows, a1) in enumerate(hpv_fixture.FILES, 1):
-        write_xlsx(
-            tmp_path / f"file{i}.xlsx",
-            [[a1], [], list(cols), *[list(r) for r in rows]],
-            inline=(i % 2 == 0),
-        )
-    return tmp_path
-
-
-def test_batch_source_equals_mapinpandas_route(spark, xlsx_dir):
-    via_source = spark.read.format("hpv_sheets").load(str(xlsx_dir / "*.xlsx"))
-    via_lib = read_sheets_excel(spark, str(xlsx_dir / "*.xlsx"))
-    assert via_source.schema == via_lib.schema
-    assert _key(via_source.collect()) == _key(via_lib.collect())
-    # one partition per file — executor-side parallel parse
-    assert via_source.rdd.getNumPartitions() == len(hpv_fixture.FILES)
-
-
-def test_batch_source_csv_format_inferred(spark, tmp_path):
-    import csv
-
-    for i, (cols, rows, a1) in enumerate(hpv_fixture.FILES, 1):
-        with open(tmp_path / f"f{i}.csv", "w", newline="") as f:
-            w = csv.writer(f)
-            w.writerow([a1])
-            w.writerow([])
-            w.writerow(cols)
-            w.writerows([["" if v is None else v for v in r] for r in rows])
-    via_source = spark.read.format("hpv_sheets").load(str(tmp_path / "*.csv"))
-    via_lib = read_sheets_csv(spark, str(tmp_path / "*.csv"))
-    assert _key(via_source.collect()) == _key(via_lib.collect())
-
-
-def test_bad_format_raises_on_driver(spark, tmp_path):
-    with pytest.raises(Exception, match="unknown format"):
-        spark.read.format("hpv_sheets").option("format", "ods").load(
-            str(tmp_path / "*.ods")
-        ).collect()
 
 
 def test_stream_source_consumes_incremental_drops(spark, tmp_path):

@@ -13,7 +13,7 @@ def test_all_flat_exports_resolve():
     surface_names = [
         "JobConfig", "run_hpv_job", "run_pipeline", "catalog", "load_table",
         "register_views", "overwrite_parquet", "overwrite_jdbc", "read_jdbc",
-        "read_sheets_csv", "read_sheets_excel", "asof_join_backward",
+        "read_sheets", "read_sheets_csv", "read_sheets_excel", "asof_join_backward",
         "asof_join_forward", "proximity_self_join", "merge_upsert",
         "salted_join", "write_bucketed", "unpivot", "cube_rollup_labeled",
         "exact_dedup_keepers", "minhash_lsh_pairs", "lsh_dedup_keepers",

@@ -1,18 +1,29 @@
-"""End-to-end job test: spreadsheet-contract CSV files on disk →
-distributed melt → pipeline → parquet sink; result must equal the same
-fixture fed through the in-memory wide path (two independent routes,
+"""End-to-end job test: spreadsheet-contract CSV/xlsx files on disk →
+distributed melt → pipeline → parquet sink; the result must equal the
+DuckDB oracle rendered from the same fixture (an independent route to
 one answer)."""
 
 from __future__ import annotations
 
+import collections
 import csv
 
+import duckdb
 import pytest
 
 from hpv_etl_code_spark.plans import hpv_fixture
-from hpv_etl_code_spark.plans.hpv_pipeline import run_pipeline
 from hpv_etl_code_spark.plans.job import JobConfig, run_hpv_job
 from hpv_etl_code_spark.sources.sheets import read_sheets_excel
+
+
+def _oracle_rows():
+    return collections.Counter(duckdb.sql(hpv_fixture.render_oracle_sql()).fetchall())
+
+
+def _job_rows(spark, data_glob, out_path):
+    n = run_hpv_job(spark, JobConfig(data_glob, out_path, hpv_fixture.EXTRACT_DATE))
+    assert n > 0
+    return collections.Counter(tuple(r) for r in spark.read.parquet(out_path).collect())
 
 
 def _write_sheet(path, cols, rows, a1):
@@ -33,25 +44,9 @@ def sheet_dir(tmp_path):
 
 
 def test_csv_job_equals_inmemory_pipeline(spark, sheet_dir, tmp_path):
-    out_path = str(tmp_path / "out")
-    cfg = JobConfig(
-        data_glob=str(sheet_dir / "*.csv"),
-        output_path=out_path,
-        extract_date=hpv_fixture.EXTRACT_DATE,
-    )
-    n = run_hpv_job(spark, cfg)
-    assert n > 0
-
-    got = {
-        tuple(r) for r in spark.read.parquet(out_path).collect()
-    }
-    want = {
-        tuple(r)
-        for r in run_pipeline(
-            hpv_fixture.build_spark_files(spark), hpv_fixture.EXTRACT_DATE
-        ).collect()
-    }
-    assert got == want
+    """CSV sheets through the whole job equal the DuckDB oracle."""
+    got = _job_rows(spark, str(sheet_dir / "*.csv"), str(tmp_path / "out"))
+    assert got == _oracle_rows()
 
 
 def test_incremental_job_overwrites_only_present_years(spark, tmp_path):
@@ -138,26 +133,40 @@ def test_xlsx_melt_equals_csv_melt(spark, sheet_dir, xlsx_dir):
 
 
 def test_xlsx_job_equals_inmemory_pipeline(spark, xlsx_dir, tmp_path):
-    """Full job over REAL .xlsx files (the reference's input format) —
-    same result as the in-memory wide route."""
-    out_path = str(tmp_path / "out_xlsx")
-    n = run_hpv_job(
-        spark,
-        JobConfig(
-            data_glob=str(xlsx_dir / "*.xlsx"),
-            output_path=out_path,
-            extract_date=hpv_fixture.EXTRACT_DATE,
-        ),
-    )
-    assert n > 0
-    got = {tuple(r) for r in spark.read.parquet(out_path).collect()}
-    want = {
-        tuple(r)
-        for r in run_pipeline(
-            hpv_fixture.build_spark_files(spark), hpv_fixture.EXTRACT_DATE
-        ).collect()
-    }
-    assert got == want
+    """Full job over REAL .xlsx files (the reference's input format)
+    equals the DuckDB oracle."""
+    got = _job_rows(spark, str(xlsx_dir / "*.xlsx"), str(tmp_path / "out_xlsx"))
+    assert got == _oracle_rows()
+
+
+@pytest.mark.parametrize("pattern", ["*.{csv,xlsx}", "*.{xlsx,csv}"])
+def test_mixed_format_glob_equals_oracle(spark, tmp_path, pattern):
+    """One glob over a directory holding both formats: each file is
+    parsed by its own extension, whatever order the glob names them."""
+    from tests.xlsx_util import write_xlsx
+
+    data = tmp_path / "mixed"
+    data.mkdir()
+    for i, (cols, rows, a1) in enumerate(hpv_fixture.FILES, 1):
+        if i % 2:
+            write_xlsx(data / f"file{i}.xlsx", _xlsx_grid(cols, rows, a1))
+        else:
+            _write_sheet(data / f"file{i}.csv", cols, rows, a1)
+    got = _job_rows(spark, str(data / pattern), str(tmp_path / "out"))
+    assert got == _oracle_rows()
+
+
+def test_unsupported_extension_names_the_file(spark, sheet_dir, tmp_path):
+    (sheet_dir / "stray.ods").write_bytes(b"not a sheet")
+    with pytest.raises(Exception, match=r"stray\.ods"):
+        run_hpv_job(
+            spark,
+            JobConfig(
+                str(sheet_dir / "*.{csv,ods}"),
+                str(tmp_path / "out"),
+                hpv_fixture.EXTRACT_DATE,
+            ),
+        )
 
 
 def test_xlsx_sparse_rows_land_in_right_columns(spark, tmp_path):
