@@ -1,14 +1,11 @@
-"""Durable stage artifacts — the storage seam for multi-branch plans
-(VERDICT r5 #7).
+"""Durable stage artifacts — the one cache for frames that several plan
+branches read.
 
 A DataFrame that feeds several plan branches must be materialized once
-or Spark recomputes its whole lineage per branch. Four materialization
-strategies, selected per call or globally via
-``SPARK_GRAFT_STAGE_STORAGE``:
+or Spark recomputes its whole lineage per branch. The strategy is chosen
+by the deployment alone (:func:`stage_storage`), never by the caller:
 
-- ``checkpoint`` (the LOCAL-master default since optimization round 9;
-  round 10 made the default deploy-mode-aware — a cluster master
-  defaults to ``parquet`` instead, see :func:`stage_storage`) —
+- ``checkpoint`` (a ``local`` / ``local[...]`` master) —
   ``localCheckpoint(eager=True)``: blocks live in the block manager
   like a persist, AND the logical plan is truncated to a leaf
   (``LogicalRDD``). The truncation is the point: the dedup/pipeline
@@ -20,32 +17,28 @@ strategies, selected per call or globally via
   sf0.1, ~40 % of wall (guide §3.3/§7.3: very large plans make
   planning itself the bottleneck; materialise intermediates). On
   executor loss the blocks are unrecoverable (no lineage) — a
-  single-JVM local run dies with its executor anyway; cluster runs
-  wanting durability use ``parquet``.
-- ``memory`` — plain ``persist()`` (MEMORY_AND_DISK), lineage kept: on
-  executor loss the frame silently recomputes. The pre-round-9
-  default, kept for callers that want recomputability over plan size.
-- ``parquet`` — write the frame to a per-session scratch directory and
-  read it back: the lineage is TRUNCATED at a durable file, so a
-  cluster run survives executor loss without recompute storms, and the
-  artifact is inspectable/reusable across jobs — the
-  ``build_corpus_index`` pattern generalized. This is what a 100 TB
-  deployment should run with (pointing ``SPARK_GRAFT_ARTIFACT_DIR`` at
-  reliable storage, e.g. an HDFS/S3 path).
-- ``none`` — pass-through (recompute per branch); the measurement
-  baseline.
+  single-JVM local run dies with its executor anyway.
+- ``parquet`` (a cluster master with ``SPARK_GRAFT_ARTIFACT_DIR`` set) —
+  write the frame under that directory and read it back: the lineage is
+  TRUNCATED at a durable file, so a cluster run survives executor loss
+  without recompute storms — the ``build_corpus_index`` pattern
+  generalized. The directory must be storage every node shares (e.g. an
+  HDFS/S3 path).
+- ``memory`` (any other cluster master) — plain ``persist()``
+  (MEMORY_AND_DISK), lineage kept: on executor loss the frame silently
+  recomputes.
 
-Artifacts are cached per (SparkSession, name): the caller's ``name``
-must uniquely identify the frame CONTENT within a session (include the
-sf_dir / table identity), exactly like ``plans/shared_cache.py`` keys.
-
-Results are storage-invariant by construction — every strategy
-materializes the same rows (equivalence-tested in
-``tests/test_artifacts.py``).
+Artifacts are cached per (SparkSession, name, content, strategy):
+:func:`stage_artifact` keys on a fingerprint of the frame's plan,
+:func:`stage_artifact_from` on a caller-supplied content key (the
+sf_dir, as in ``plans/shared_cache.py``). Results are storage-invariant
+by construction — every strategy materializes the same rows
+(equivalence-tested in ``tests/test_artifacts.py``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import tempfile
@@ -53,12 +46,9 @@ import threading
 
 from pyspark.sql import DataFrame
 
-_STORAGE_ENV = "SPARK_GRAFT_STAGE_STORAGE"
 _DIR_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
-_REUSE_ENV = "SPARK_GRAFT_ARTIFACT_REUSE"
-_STRATEGIES = ("checkpoint", "memory", "parquet", "none")
 
-# (applicationId, name, fingerprint-or-content-key, storage) → frame
+# (applicationId, name, content digest, storage) → frame
 _CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
 # Serializes build-and-insert per key so two threads staging the same
 # artifact never double-build (the same race the recursive-CTE conf
@@ -74,136 +64,96 @@ def _key_lock(key: tuple[str, ...]) -> threading.Lock:
         return _KEY_LOCKS.setdefault(key, threading.Lock())
 
 
-def stage_storage(spark=None) -> str:
-    """The session-default strategy: ``$SPARK_GRAFT_STAGE_STORAGE`` if
-    set, else deploy-mode-aware (VERDICT r9 #5 / ADVICE r9): a
-    ``local[*]`` master defaults to ``checkpoint`` (the single JVM dies
-    with its executor anyway, so checkpoint's no-lineage blocks lose
-    nothing and the plan truncation is pure win), while a CLUSTER
-    master (``local-cluster[...]`` included: its executors are separate
-    JVMs) defaults to ``parquet`` — ``localCheckpoint`` blocks are
-    unrecoverable on executor loss, so a default that lands on a real
-    cluster must be the durable one — or to ``memory`` when
-    ``$SPARK_GRAFT_ARTIFACT_DIR`` is unset, since parquet artifacts in a
-    node-local tempdir are unreadable from the other nodes. Unknown
-    values fail loudly — a typo silently degrading to
-    recompute-per-branch would be a 100 TB performance bug."""
-    s = os.environ.get(_STORAGE_ENV)
-    if s is not None:
-        if s not in _STRATEGIES:
-            raise ValueError(
-                f"{_STORAGE_ENV}={s!r}: expected one of {_STRATEGIES}"
-            )
-        return s
-    if spark is None:
-        from pyspark.sql import SparkSession
+def _is_local(spark) -> bool:
+    # local-cluster[...] runs separate executor JVMs: not local
+    return bool(re.match(r"local(\[|$)", spark.sparkContext.master))
 
-        spark = (
-            SparkSession.getActiveSession()
-            or SparkSession._instantiatedSession
-        )
-    if spark is None or re.match(r"local(\[|$)", spark.sparkContext.master):
+
+def stage_storage(spark) -> str:
+    """The strategy this deployment stages with: a ``local[*]`` master
+    gets ``checkpoint`` (the single JVM dies with its executor anyway,
+    so checkpoint's no-lineage blocks lose nothing and the plan
+    truncation is pure win). A CLUSTER master gets
+    ``parquet`` under ``$SPARK_GRAFT_ARTIFACT_DIR`` — ``localCheckpoint``
+    blocks are unrecoverable on executor loss, so a cluster must stage
+    durably — or ``memory`` when that directory is unset, since parquet
+    artifacts in a node-local tempdir are unreadable from the other
+    nodes."""
+    if _is_local(spark):
         return "checkpoint"
-    # parquet needs storage every node shares; the tempdir fallback of
-    # _scratch_dir is node-local, so without one stay lineage-backed
     return "parquet" if os.environ.get(_DIR_ENV) else "memory"
 
 
-def stage_artifact(
-    df: DataFrame, name: str, storage: str | None = None
-) -> DataFrame:
+def stage_artifact(df: DataFrame, name: str) -> DataFrame:
     """Materialize ``df`` once under ``name`` and return the frame every
-    downstream branch should read. ``storage=None`` uses
-    :func:`stage_storage`; see the module docstring for strategies."""
-    storage = stage_storage(df.sparkSession) if storage is None else storage
-    if storage not in _STRATEGIES:
-        raise ValueError(f"storage={storage!r}: expected one of {_STRATEGIES}")
-    if storage == "none":
-        return df
-    if not re.fullmatch(r"[A-Za-z0-9._\-]+", name):
-        raise ValueError(
-            f"artifact name {name!r} must be filesystem-safe "
-            "([A-Za-z0-9._-]+) — it becomes a directory name"
-        )
-    spark = df.sparkSession
-    # key includes a fingerprint of the ANALYZED logical plan: two
-    # frames sharing a name but holding different content (e.g. the
-    # same pipeline at two sf_dirs in one session) must never alias —
-    # deterministic plans with equal text produce equal rows, so a
-    # fingerprint hit is a true content hit
-    fp = _plan_fingerprint(df)
-    key = (spark.sparkContext.applicationId, name, fp, storage)
-    if key in _CACHE:
-        return _CACHE[key]
-    with _key_lock(key):
-        if key in _CACHE:  # built by a concurrent thread while we waited
-            return _CACHE[key]
-        _prune_dead_entries()
-        if storage == "memory":
-            out = df.persist()
-        elif storage == "checkpoint":
-            out = df.localCheckpoint(eager=True)
-        else:  # parquet
-            path = _artifact_path(spark, name, fp)
-            if not (_reuse_enabled() and _is_complete(path)):
-                df.write.mode("overwrite").parquet(path)
-            out = spark.read.parquet(path)
-        with _CACHE_MUTEX:
-            _CACHE[key] = out
-    return out
+    downstream branch should read (strategy: :func:`stage_storage`).
+    The key includes a fingerprint of the ANALYZED logical plan: two
+    frames sharing a name but holding different content (e.g. the same
+    pipeline at two sf_dirs in one session) must never alias —
+    deterministic plans with equal text produce equal rows, so a
+    fingerprint hit is a true content hit."""
+    return _stage(df.sparkSession, _plan_fingerprint(df), name, lambda: df)
 
 
 def stage_artifact_from(
-    spark,
-    builder,
-    name: str,
-    content_key: str,
-    storage: str | None = None,
+    spark, builder, name: str, content_key: str
 ) -> DataFrame:
     """Builder-deferred variant of :func:`stage_artifact`, for frames
     whose BUILD is itself expensive — iterative algorithms (pointer-
     jumping connected components, PageRank) run eager jobs at
     plan-construction time, so a plan-fingerprint cache would pay the
     full build cost on every call just to discover the hit. Keyed on
-    the caller-supplied ``content_key`` (e.g. the sf_dir) instead;
-    ``builder()`` runs only on a miss."""
-    storage = stage_storage(spark) if storage is None else storage
-    if storage == "none":
-        return builder()
-    key = (spark.sparkContext.applicationId, name, f"ck:{content_key}", storage)
-    if key in _CACHE:
-        return _CACHE[key]
-    with _key_lock(key):
-        if key in _CACHE:  # built by a concurrent thread while we waited
-            return _CACHE[key]
+    the caller-supplied ``content_key`` (e.g. the sf_dir) instead, which
+    must identify the frame content within a session; ``builder()``
+    runs only on a miss."""
+    return _stage(spark, _key_digest(content_key), name, builder)
+
+
+def _stage(spark, key: str, name: str, build) -> DataFrame:
+    """The one materialize body: cache lookup, per-key lock, dead-entry
+    pruning, materialize by strategy, insert."""
+    if not re.fullmatch(r"[A-Za-z0-9._\-]+", name):
+        raise ValueError(
+            f"artifact name {name!r} must be filesystem-safe "
+            "([A-Za-z0-9._-]+) — it becomes a directory name"
+        )
+    storage = stage_storage(spark)
+    ckey = (spark.sparkContext.applicationId, name, key, storage)
+    if ckey in _CACHE:
+        return _CACHE[ckey]
+    with _key_lock(ckey):
+        if ckey in _CACHE:  # built by a concurrent thread while we waited
+            return _CACHE[ckey]
         _prune_dead_entries()
-        if storage == "parquet":
-            if not re.fullmatch(r"[A-Za-z0-9._\-]+", name):
-                raise ValueError(
-                    f"artifact name {name!r} must be filesystem-safe"
-                )
-            path = _artifact_path(spark, name, _key_digest(content_key))
-            # cross-session rehydration (VERDICT r6 #6): with
-            # SPARK_GRAFT_ARTIFACT_REUSE=1 a completed artifact from a
-            # PREVIOUS session is read back and the (expensive) builder
-            # never runs — (name, content_key) must identify the frame
-            # content globally, which is already this function's
-            # documented key contract.
-            if not (_reuse_enabled() and _is_complete(path)):
-                builder().write.mode("overwrite").parquet(path)
+        if storage == "checkpoint":
+            out = build().localCheckpoint(eager=True)
+        elif storage == "memory":
+            out = build().persist()
+        else:  # parquet
+            path = _artifact_path(spark, name, key)
+            build().write.mode("overwrite").parquet(path)
             out = spark.read.parquet(path)
-        elif storage == "checkpoint":
-            out = builder().localCheckpoint(eager=True)
-        else:  # memory — session-local by nature
-            out = builder().persist()
         with _CACHE_MUTEX:
-            _CACHE[key] = out
+            _CACHE[ckey] = out
     return out
 
 
-def _key_digest(content_key: str) -> str:
-    import hashlib
+def write_once(spark, name: str, content_key: str, write) -> str:
+    """The ``<scratch>/<name>_<digest>`` directory for ``content_key``,
+    written by ``write(path)`` only while it holds no ``_SUCCESS``
+    marker — once per session, serialized by the per-key lock, for
+    callers that read the files back themselves (e.g. a file-stream
+    replay copy). Raises ``ValueError`` on a cluster master without
+    ``$SPARK_GRAFT_ARTIFACT_DIR``: files the executors wrote to their
+    node-local tempdirs could not be read back."""
+    path = _artifact_path(spark, name, _key_digest(content_key))
+    with _key_lock((spark.sparkContext.applicationId, name, path)):
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            write(path)
+    return path
 
+
+def _key_digest(content_key: str) -> str:
     return hashlib.md5(str(content_key).encode()).hexdigest()[:12]
 
 
@@ -230,8 +180,6 @@ def _plan_fingerprint(df: DataFrame) -> str:
     immune to cache substitution (measured: stable across rebuilds and
     persists, distinct across directories, distinct across
     local-relation contents)."""
-    import hashlib
-
     text = re.sub(
         r"#\d+", "#", df._jdf.queryExecution().analyzed().toString()
     )
@@ -239,61 +187,30 @@ def _plan_fingerprint(df: DataFrame) -> str:
     return hashlib.md5(f"{text}\x00{sem}".encode()).hexdigest()[:12]
 
 
-def _reuse_enabled() -> bool:
-    """``SPARK_GRAFT_ARTIFACT_REUSE=1`` opts parquet artifacts into
-    CROSS-SESSION reuse: paths drop the applicationId component, and a
-    completed artifact directory from a previous session is rehydrated
-    instead of rebuilt. Off by default — reuse is only sound when the
-    artifact store outlives sessions on purpose (a cluster pointing
-    ``SPARK_GRAFT_ARTIFACT_DIR`` at reliable shared storage) and keys
-    honor the content-identity contract (they do: plan fingerprints
-    fold normalized analyzed-plan text + ``df.semanticHash()`` — see
-    :func:`_fingerprint`, which is immune to CacheManager substitution
-    unlike the retired inputFiles() component; content_keys are
-    caller-owned)."""
-    return os.environ.get(_REUSE_ENV, "") == "1"
-
-
-def _is_complete(path: str) -> bool:
-    """Only a _SUCCESS-marked directory is reusable — a crashed writer
-    leaves a partial directory that must be overwritten, not served."""
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
 def _artifact_path(spark, name: str, digest: str) -> str:
-    base = (
-        _shared_dir() if _reuse_enabled() else _scratch_dir(spark)
-    )
-    return os.path.join(base, f"{name}_{digest}")
-
-
-def _shared_dir() -> str:
-    """Session-independent artifact root for the cross-session reuse
-    mode (``$SPARK_GRAFT_ARTIFACT_DIR/shared`` or a stable tempdir)."""
-    base = os.environ.get(_DIR_ENV) or tempfile.gettempdir()
-    d = os.path.join(base, "spark_graft_artifacts_shared")
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _scratch_dir(spark) -> str:
-    """$SPARK_GRAFT_ARTIFACT_DIR (the durable location a cluster run
-    points at reliable storage) or a per-application tempdir."""
+    """``$SPARK_GRAFT_ARTIFACT_DIR/<appId>/<name>_<digest>`` (the
+    durable location a cluster run points at shared storage) or, on a
+    local master only, a per-application tempdir."""
+    app = spark.sparkContext.applicationId
     base = os.environ.get(_DIR_ENV)
     if base:
-        return os.path.join(base, spark.sparkContext.applicationId)
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_artifacts_{spark.sparkContext.applicationId}",
-    )
+        return os.path.join(base, app, f"{name}_{digest}")
+    if not _is_local(spark):
+        raise ValueError(
+            f"{_DIR_ENV} is unset: a cluster master needs a directory "
+            "every node shares for its scratch artifacts"
+        )
+    d = os.path.join(tempfile.gettempdir(), f"spark_graft_artifacts_{app}")
     os.makedirs(d, exist_ok=True)
-    return d
+    return os.path.join(d, f"{name}_{digest}")
 
 
 def _prune_dead_entries() -> None:
-    """Drop cache entries bound to stopped SparkSessions (same hygiene
-    as ``shared_cache._prune_dead_entries`` — a cycling driver must
-    never be handed a frame of a dead context)."""
+    """Drop cache entries bound to stopped SparkSessions — a process
+    cycling get_spark()/spark.stop() (repeated bench invocations,
+    notebook restarts) must neither leak handles for dead sessions nor
+    ever be handed a frame of a dead context. Called on cache misses —
+    the hit path stays dict-lookup-only."""
     with _CACHE_MUTEX:
         snapshot = list(_CACHE.items())
     dead = []
@@ -362,10 +279,10 @@ def clear_cache() -> None:
     # JVM GC + ContextCleaner once the last reference drops. Eagerly
     # unpersisting the LogicalRDD's RDD was tried in round 10 and
     # REVERTED: a checkpoint frame has NO lineage, so destroying its
-    # blocks breaks every holder that survives this cache (e.g.
-    # plans/shared_cache.py keeps its own references to staged frames;
-    # a memory-persist consumer would transparently recompute, a
-    # checkpoint consumer fails the job) — reproduced by
+    # blocks breaks every holder that survives this cache (a caller
+    # still holding a frame it was handed; a memory-persist consumer
+    # would transparently recompute, a checkpoint consumer fails the
+    # job) — reproduced by
     # tests/test_graph_health.py::test_indexed_sizes_plan_reads_artifact_not_pairs
     # in the full suite. GC ownership is the correct contract: the
     # ContextCleaner frees the blocks exactly when no frame can read

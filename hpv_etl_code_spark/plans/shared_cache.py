@@ -28,12 +28,14 @@ use. Results are unchanged — every derived column is a deterministic
 per-row function — only the redundant recompute across entries (and now
 the redundant payload carry across stages) disappears.
 
-Materialization goes through the :mod:`.artifacts` storage seam
-(VERDICT r5 #7): the default is a session-scoped memory persist;
-setting ``SPARK_GRAFT_STAGE_STORAGE=parquet`` turns every shared frame
-into a durable parquet artifact (lineage truncated — a cluster run
-survives executor loss without recompute storms), equivalence-tested
-in ``tests/test_artifacts.py``.
+Every staged frame goes through the one stage-artifact cache
+(:func:`.artifacts.stage_artifact_from`, keyed on the sf_dir), so its
+storage follows the deployment: a ``localCheckpoint`` on a local master,
+a parquet artifact under ``SPARK_GRAFT_ARTIFACT_DIR`` on a cluster
+(lineage truncated — a cluster run survives executor loss without
+recompute storms), equivalence-tested in ``tests/test_artifacts.py``.
+Projections of staged frames (``members``, ``corpus_fps``) are rebuilt
+lazily on each call.
 """
 
 from __future__ import annotations
@@ -42,7 +44,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import textops
-from .artifacts import stage_artifact
+from . import artifacts
+from .artifacts import stage_artifact_from
 from ..operators.dedup import minhash_signature, scaled_lsh_params
 from ..operators.textops import distinct_tokens
 from ..sources.registry import load_table
@@ -54,7 +57,6 @@ from ..sources.registry import load_table
 # (VERDICT r7 #1: fixed (16, 4) banding is FP-quadratic at scale).
 _NUM_HASHES = 16
 
-_CACHE: dict[tuple[str, str], DataFrame] = {}
 _COUNTS: dict[tuple[str, str], int] = {}
 
 
@@ -116,11 +118,9 @@ def enriched_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages touch. At 100 TB this is the narrow "document catalog"
     parquet artifact beside the (separate) signature-group artifact.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "enriched")
-    if key not in _CACHE:
-        _prune_dead_entries()
-        d = load_table(spark, sf_dir, "documents")
-        base = d.select(
+
+    def build() -> DataFrame:
+        return load_table(spark, sf_dir, "documents").select(
             "doc_id",
             "lang",
             "source",
@@ -130,8 +130,22 @@ def enriched_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("text")).alias("fp"),
             _gkey(_hashed_toks("text")).alias("gkey"),
         )
-        _CACHE[key] = stage_artifact(base, "shared_enriched")
-    return _CACHE[key]
+
+    return stage_artifact_from(spark, build, "shared_enriched", sf_dir)
+
+
+def _members(docs: DataFrame) -> DataFrame:
+    """doc_id → gkey membership of a narrow per-document frame."""
+    return docs.select(F.col("doc_id").alias("id"), "gkey")
+
+
+def _regroup(members: DataFrame, groups: DataFrame) -> DataFrame:
+    """The ``groups`` rows of the gkeys in ``members``, ``gn`` recounted
+    over ``members`` (a tokset's toks/sig don't depend on which
+    documents hold it)."""
+    return members.groupBy("gkey").agg(F.count(F.lit(1)).alias("gn")).join(
+        groups.select("gkey", "toks", "sig"), "gkey"
+    )
 
 
 def grouped_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -147,14 +161,14 @@ def grouped_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     references ``groups`` from many branches — persisting it is what
     keeps the collapse a win. At 100 TB both are parquet artifacts
     written next to the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir, "groups")
-    if key not in _CACHE:
+
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         nh, _bands = corpus_lsh_params(spark, sf_dir)
         keyed = d.select(_hashed_toks("text").alias("toks")).withColumn(
             "gkey", _gkey(F.col("toks"))
         )
-        groups = (
+        return (
             keyed.groupBy("gkey")
             .agg(
                 F.count(F.lit(1)).alias("gn"),
@@ -162,11 +176,11 @@ def grouped_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
             )
             .withColumn("sig", minhash_signature(F.col("toks"), nh))
         )
-        members = enriched_documents(spark, sf_dir).select(
-            F.col("doc_id").alias("id"), "gkey"
-        )
-        _CACHE[key] = (members, stage_artifact(groups, "shared_groups"))
-    return _CACHE[key]
+
+    return (
+        _members(enriched_documents(spark, sf_dir)),
+        stage_artifact_from(spark, build, "shared_groups", sf_dir),
+    )
 
 
 def _portable_groups_from_docs(d: DataFrame, num_hashes: int) -> DataFrame:
@@ -202,13 +216,23 @@ def portable_grouped_corpus(
     ``pgroups`` carries one row per distinct tokset with the STRING
     token set and the md5 min-hash signature. Persisted: the LSH plan
     reads it from several branches."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pgroups")
-    if key not in _CACHE:
+    return _portable_grouped(spark, sf_dir, "shared_pgroups", lambda: _NUM_HASHES)
+
+
+def _portable_grouped(
+    spark: SparkSession, sf_dir: str, name: str, num_hashes
+) -> tuple[DataFrame, DataFrame]:
+    """Corpus members and the portable group frame staged under ``name``
+    at signature width ``num_hashes()`` (called on a build only)."""
+
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
-        members, _ = grouped_corpus(spark, sf_dir)
-        pgroups = _portable_groups_from_docs(d, _NUM_HASHES)
-        _CACHE[key] = (members, stage_artifact(pgroups, "shared_pgroups"))
-    return _CACHE[key]
+        return _portable_groups_from_docs(d, num_hashes())
+
+    return (
+        _members(enriched_documents(spark, sf_dir)),
+        stage_artifact_from(spark, build, name, sf_dir),
+    )
 
 
 def pipeline_exact_deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,8 +242,8 @@ def pipeline_exact_deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scalars + gkey): the near-dup stage resolves its wide payloads per
     distinct tokset via :func:`pipeline_grouped`, never through this
     frame."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pipeline_exact")
-    if key not in _CACHE:
+
+    def build() -> DataFrame:
         e = enriched_documents(spark, sf_dir)
         gated = e.filter(
             (F.col("quality") >= 0.2) & F.col("lang").isin("en", "de", "es", "fr")
@@ -227,11 +251,9 @@ def pipeline_exact_deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
         keepers = gated.groupBy("fingerprint").agg(
             F.min("doc_id").alias("doc_id")
         )
-        _CACHE[key] = stage_artifact(
-            gated.join(keepers.select("doc_id"), "doc_id", "left_semi"),
-            "shared_pipeline_exact",
-        )
-    return _CACHE[key]
+        return gated.join(keepers.select("doc_id"), "doc_id", "left_semi")
+
+    return stage_artifact_from(spark, build, "shared_pipeline_exact", sf_dir)
 
 
 def pipeline_grouped(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -242,20 +264,13 @@ def pipeline_grouped(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     reused from the corpus-level group frame — a tokset surviving the
     gates has the same tokens and therefore the same signature it had
     corpus-wide, so no re-hash."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pipeline_groups")
-    if key not in _CACHE:
-        members = pipeline_exact_deduped(spark, sf_dir).select(
-            F.col("doc_id").alias("id"), "gkey"
-        )
-        _, cgroups = grouped_corpus(spark, sf_dir)
-        groups = members.groupBy("gkey").agg(
-            F.count(F.lit(1)).alias("gn")
-        ).join(cgroups.select("gkey", "toks", "sig"), "gkey")
-        _CACHE[key] = (
-            members,
-            stage_artifact(groups, "shared_pipeline_groups"),
-        )
-    return _CACHE[key]
+    members = _members(pipeline_exact_deduped(spark, sf_dir))
+    return members, stage_artifact_from(
+        spark,
+        lambda: _regroup(members, grouped_corpus(spark, sf_dir)[1]),
+        "shared_pipeline_groups",
+        sf_dir,
+    )
 
 
 def pipeline_portable_grouped(
@@ -267,16 +282,17 @@ def pipeline_portable_grouped(
     is computed only for SURVIVING documents (documents semi-joined to
     the narrow exact-deduped frame), preserving the stage-order cost
     profile (cheap gates shrink the corpus before the expensive hash)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pipeline_pgroups")
-    if key not in _CACHE:
-        ed = pipeline_exact_deduped(spark, sf_dir)
-        members = ed.select(F.col("doc_id").alias("id"), "gkey")
+    ed = pipeline_exact_deduped(spark, sf_dir)
+
+    def build() -> DataFrame:
         dd = load_table(spark, sf_dir, "documents").join(
             ed.select("doc_id"), "doc_id", "left_semi"
         )
-        pgroups = _portable_groups_from_docs(dd, _NUM_HASHES)
-        _CACHE[key] = (members, stage_artifact(pgroups, "shared_pipeline_pgroups"))
-    return _CACHE[key]
+        return _portable_groups_from_docs(dd, _NUM_HASHES)
+
+    return _members(ed), stage_artifact_from(
+        spark, build, "shared_pipeline_pgroups", sf_dir
+    )
 
 
 def incremental_grouped(
@@ -292,34 +308,31 @@ def incremental_grouped(
     reads the narrow enriched frame; ``new_docs`` carries (id, text,
     fp, gkey) straight off the batch slice of ``documents`` — the only
     full-text frame here, and it is batch-sized."""
-    key = (spark.sparkContext.applicationId, sf_dir, "incr_groups")
-    if key not in _CACHE:
-        e = enriched_documents(spark, sf_dir)
-        members, groups = grouped_corpus(spark, sf_dir)
+    members, groups = grouped_corpus(spark, sf_dir)
 
-        def split_groups(pred) -> DataFrame:  # noqa: ANN001
-            side = members.filter(pred)
-            return side.groupBy("gkey").agg(
-                F.count(F.lit(1)).alias("gn")
-            ).join(groups.select("gkey", "toks", "sig"), "gkey")
+    def split_groups(name: str, pred: Column) -> DataFrame:
+        return stage_artifact_from(
+            spark, lambda: _regroup(members.filter(pred), groups), name, sf_dir
+        )
 
-        batch_groups = split_groups(F.col("id") % 5 == 0)
-        corpus_groups = split_groups(F.col("id") % 5 != 0)
-        d = load_table(spark, sf_dir, "documents")
-        new_docs = d.filter(F.col("doc_id") % 5 == 0).select(
-            F.col("doc_id").alias("id"),
-            "text",
-            F.md5(F.col("text")).alias("fp"),
-            _gkey(_hashed_toks("text")).alias("gkey"),
-        )
-        corpus_fps = e.filter(F.col("doc_id") % 5 != 0).select("fp")
-        _CACHE[key] = (
-            new_docs,
-            stage_artifact(batch_groups, "shared_incr_batch_groups"),
-            corpus_fps,
-            stage_artifact(corpus_groups, "shared_incr_corpus_groups"),
-        )
-    return _CACHE[key]
+    d = load_table(spark, sf_dir, "documents")
+    new_docs = d.filter(F.col("doc_id") % 5 == 0).select(
+        F.col("doc_id").alias("id"),
+        "text",
+        F.md5(F.col("text")).alias("fp"),
+        _gkey(_hashed_toks("text")).alias("gkey"),
+    )
+    corpus_fps = (
+        enriched_documents(spark, sf_dir)
+        .filter(F.col("doc_id") % 5 != 0)
+        .select("fp")
+    )
+    return (
+        new_docs,
+        split_groups("shared_incr_batch_groups", F.col("id") % 5 == 0),
+        corpus_fps,
+        split_groups("shared_incr_corpus_groups", F.col("id") % 5 != 0),
+    )
 
 
 def scaled_portable_grouped_corpus(
@@ -334,43 +347,14 @@ def scaled_portable_grouped_corpus(
     their exact certified signature while the scaled consumers
     (``dedup_components_portable`` and the cluster readouts) band with
     corpus-sized parameters."""
-    key = (spark.sparkContext.applicationId, sf_dir, "spgroups")
-    if key not in _CACHE:
-        d = load_table(spark, sf_dir, "documents")
-        members, _ = grouped_corpus(spark, sf_dir)
-        nh, _bands = corpus_lsh_params(spark, sf_dir)
-        spgroups = _portable_groups_from_docs(d, nh)
-        _CACHE[key] = (members, stage_artifact(spgroups, "shared_spgroups"))
-    return _CACHE[key]
-
-
-def _prune_dead_entries() -> None:
-    """Drop cache entries whose SparkSession has been stopped — a
-    long-lived driver that cycles get_spark()/spark.stop() (repeated
-    bench invocations, notebook restarts) must neither accumulate
-    handles for dead sessions nor ever be handed a DataFrame bound to a
-    stopped SparkContext (a fresh session gets a fresh applicationId,
-    so a stale same-key hit is impossible; this is pure leak hygiene).
-    Called on cache misses — the cheap path stays dict-lookup-only."""
-    dead = []
-    for key, val in _CACHE.items():
-        df = val[0] if isinstance(val, tuple) else val
-        try:
-            if df.sparkSession.sparkContext._jsc.sc().isStopped():
-                dead.append(key)
-        except Exception:  # noqa: BLE001 — unreachable JVM == dead session
-            dead.append(key)
-    for key in dead:
-        _CACHE.pop(key, None)
+    return _portable_grouped(
+        spark, sf_dir, "shared_spgroups",
+        lambda: corpus_lsh_params(spark, sf_dir)[0],
+    )
 
 
 def clear_cache() -> None:
-    """Unpersist and drop all cached frames (tests / session teardown)."""
-    for val in _CACHE.values():
-        for df in val if isinstance(val, tuple) else (val,):
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session may already be gone
-                pass
-    _CACHE.clear()
+    """Drop every staged artifact and cached corpus count (tests /
+    session teardown)."""
+    artifacts.clear_cache()
     _COUNTS.clear()

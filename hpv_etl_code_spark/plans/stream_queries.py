@@ -40,22 +40,18 @@ def _table_replay_stream(
     integer/decimal sums / mergeable bottom-k). Keyed by md5(sf_dir) —
     the repo's portable content-key convention — instead of the
     PYTHONHASHSEED-dependent ``abs(hash(sf_dir))``."""
-    import os
+    from .artifacts import write_once
 
-    from .artifacts import _key_digest, _key_lock, _scratch_dir
-
-    src = os.path.join(
-        _scratch_dir(spark), f"{table}_replay_{_key_digest(sf_dir)}"
+    src = write_once(
+        spark,
+        f"{table}_replay",
+        sf_dir,
+        lambda path: load_table(spark, sf_dir, table)
+        .select(*superset_cols)
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(path),
     )
-    with _key_lock((spark.sparkContext.applicationId, f"{table}_replay", src)):
-        if not os.path.exists(os.path.join(src, "_SUCCESS")):
-            (
-                load_table(spark, sf_dir, table)
-                .select(*superset_cols)
-                .repartition(4)
-                .write.mode("overwrite")
-                .parquet(src)
-            )
     schema = spark.read.parquet(src).schema
     return (
         spark.readStream.format("parquet")

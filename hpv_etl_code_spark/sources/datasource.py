@@ -27,12 +27,26 @@ bit-identically for checkpoint recovery.
 from __future__ import annotations
 
 import glob as _glob
+import re
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from .sheets import MELTED_SCHEMA, parse_sheet
+
+
+def _brace_patterns(pattern: str) -> list[str]:
+    """Expand ``{a,b}`` alternation (innermost group first, so groups
+    nest) into plain patterns: Python's glob has none, Hadoop's glob —
+    the batch reader's — does."""
+    m = re.search(r"\{([^{}]*)\}", pattern)
+    if m is None:
+        return [pattern]
+    head, tail = pattern[: m.start()], pattern[m.end() :]
+    return [
+        p for alt in m.group(1).split(",") for p in _brace_patterns(head + alt + tail)
+    ]
 
 
 class _SheetsStreamReader(SimpleDataSourceStreamReader):
@@ -50,7 +64,9 @@ class _SheetsStreamReader(SimpleDataSourceStreamReader):
             )
 
     def _files_after(self, last: str, until: str | None = None) -> list[str]:
-        names = sorted(_glob.glob(self._path))
+        names = sorted(
+            {n for p in _brace_patterns(self._path) for n in _glob.glob(p)}
+        )
         return [
             n for n in names if n > last and (until is None or n <= until)
         ]

@@ -8,7 +8,7 @@ import pytest
 
 from hpv_etl_code_spark.plans import hpv_fixture
 from hpv_etl_code_spark.sources.datasource import HpvSheetsDataSource
-from hpv_etl_code_spark.sources.sheets import read_sheets_excel
+from hpv_etl_code_spark.sources.sheets import read_sheets, read_sheets_excel
 
 
 def _key(rows):
@@ -93,3 +93,33 @@ def test_stream_source_checkpoint_restart_no_reprocessing(spark, tmp_path):
     want = read_sheets_excel(spark, str(drop / "*.xlsx"))
     assert sunk.count() == want.count()  # exactly-once: no replayed rows
     assert _key(sunk.collect()) == _key(want.collect())
+
+
+def test_stream_source_expands_brace_globs(spark, tmp_path):
+    """A ``*.{csv,xlsx}`` drop streams both formats, like the batch
+    reader's Hadoop glob over the same pattern."""
+    from tests.test_sheets_job import _write_sheet, _xlsx_grid
+    from tests.xlsx_util import write_xlsx
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    for i, (cols, rows, a1) in enumerate(hpv_fixture.FILES, 1):
+        if i % 2:
+            write_xlsx(drop / f"{i:05d}.xlsx", _xlsx_grid(cols, rows, a1))
+        else:
+            _write_sheet(drop / f"{i:05d}.csv", cols, rows, a1)
+    pattern = str(drop / "*.{csv,xlsx}")
+    q = (
+        spark.readStream.format("hpv_sheets").load(pattern)
+        .writeStream.format("memory")
+        .queryName("sheet_brace_drops")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        rows = spark.sql("SELECT * FROM sheet_brace_drops").collect()
+    finally:
+        q.stop()
+    assert {r["source_file"].rsplit(".", 1)[1] for r in rows} == {"csv", "xlsx"}
+    assert _key(rows) == _key(read_sheets(spark, pattern).collect())

@@ -85,7 +85,7 @@ def test_indexed_sizes_plan_reads_artifact_not_pairs(spark, sf_dir, monkeypatch)
         dedup_cluster_sizes_indexed,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "parquet")
+    monkeypatch.setattr(artifacts, "stage_storage", lambda spark: "parquet")
     artifacts.clear_cache()
     try:
         components_artifact(spark, sf_dir).count()  # materialize once

@@ -326,10 +326,12 @@ def test_permissive_decode_uniform_across_operators(spark, sf_dir):
 
 
 def test_shared_cache_prunes_dead_session_entries(spark, sf_dir):
-    """Entries whose session has been stopped are evicted on the next
-    cache miss — a driver cycling get_spark()/stop() must not leak
-    persisted-DataFrame handles (review finding, round 3)."""
-    from hpv_etl_code_spark.plans import shared_cache
+    """Artifact-cache entries (and key locks) whose session has been
+    stopped are evicted on the next cache miss — a process cycling
+    get_spark()/stop() must not leak persisted-DataFrame handles."""
+    import threading
+
+    from hpv_etl_code_spark.plans import artifacts, shared_cache
 
     class _DeadDF:  # stands in for a DataFrame of a stopped session
         @property
@@ -339,20 +341,23 @@ def test_shared_cache_prunes_dead_session_entries(spark, sf_dir):
         def unpersist(self):
             pass
 
-    shared_cache._CACHE[("dead-app", "sf")] = _DeadDF()
-    # force the miss path (prune runs on misses only): evict any live
-    # entry a previous test may have built for this (session, sf)
-    live_key = (spark.sparkContext.applicationId, sf_dir, "enriched")
-    evicted = shared_cache._CACHE.pop(live_key, None)
-    if evicted is not None:
-        evicted.unpersist()
+    def live_keys():
+        app = spark.sparkContext.applicationId
+        return [k for k in artifacts._CACHE if k[:2] == (app, "shared_enriched")]
+
+    dead = ("dead-app", "shared_enriched", "digest", "checkpoint")
+    # force the miss path (prune runs on misses only)
+    shared_cache.clear_cache()
+    artifacts._CACHE[dead] = _DeadDF()
+    artifacts._KEY_LOCKS[("dead-app", "cleared_earlier")] = threading.Lock()
     try:
         live = shared_cache.enriched_documents(spark, sf_dir)
-        assert ("dead-app", "sf") not in shared_cache._CACHE
+        assert dead not in artifacts._CACHE
+        assert not [k for k in artifacts._KEY_LOCKS if k[0] == "dead-app"]
         assert live.count() > 0
         # live entry survives a subsequent prune
-        shared_cache._prune_dead_entries()
-        key = (spark.sparkContext.applicationId, sf_dir, "enriched")
-        assert key in shared_cache._CACHE
+        assert live_keys()
+        artifacts._prune_dead_entries()
+        assert live_keys()
     finally:
         shared_cache.clear_cache()

@@ -8,22 +8,23 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from hpv_etl_code_spark import catalog
-from hpv_etl_code_spark.plans.artifacts import _key_digest, _scratch_dir
+from hpv_etl_code_spark.plans.artifacts import write_once
 
 
-def _replay_dir(spark, sf_dir: str) -> str:
-    return os.path.join(
-        _scratch_dir(spark), f"events_replay_{_key_digest(sf_dir)}"
-    )
+def _no_rewrite(path):
+    pytest.fail(f"replay source rewritten at {path}")
 
 
 def test_one_replay_write_per_session(spark, sf_dir):
     es = catalog.entries()
-    src = _replay_dir(spark, sf_dir)
-    marker = os.path.join(src, "_SUCCESS")
 
     es["ab_stats_stream"].fn(spark, sf_dir).collect()
+    # the copy exists, so write_once hands back its path without writing
+    src = write_once(spark, "events_replay", sf_dir, _no_rewrite)
+    marker = os.path.join(src, "_SUCCESS")
     assert os.path.exists(marker)
     mtime = os.path.getmtime(marker)
 
@@ -32,7 +33,7 @@ def test_one_replay_write_per_session(spark, sf_dir):
     assert os.path.getmtime(marker) == mtime, "replay source rewritten"
 
     # and no per-entry copies exist anymore (the round-6 layout)
-    scratch = _scratch_dir(spark)
+    scratch = os.path.dirname(src)
     stale = [
         d for d in os.listdir(scratch)
         if d.startswith(("ab_stream_src_", "cuped_stream_src_",
