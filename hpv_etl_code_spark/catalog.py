@@ -4,7 +4,13 @@ Every implemented operator from SURVEY.md §2 registers here as a
 ``(name, spark_callable, oracle_sql_or_None)`` triple. The driver runs
 the Spark callable and the DuckDB oracle side-by-side at sf=0.01 and
 hash-compares; entries with ``oracle=None`` are non-SQL-expressible and
-get a rows-only check backed by invariant tests in ``tests/``.
+get a rows-only check backed by invariant tests in ``tests/``. Each
+entry has exactly one certification path, its own check: in-repo at
+sf0.001 (``tests/test_catalog_oracle.py``) and at the driver's sf0.01
+(``scripts/driver_emulation.py``), both over every entry.
+
+Order is static: the ``_PRIORITY`` head, then registration order.
+Building the catalog reads no file.
 
 Column-name contract: every computed column is aliased identically in
 the Spark plan and the oracle SQL (the driver sorts columns by name
@@ -59,25 +65,11 @@ def headline_queries() -> dict[str, QueryFn]:
 
 _POPULATED = False
 
-# The driver's correctness gate checks a bounded number of entries (~50
-# in round 1) in REGISTRATION order. This list pins the first slots so
-# every operator family gets at least one oracle-checked row: flagships
-# and e2e parity first, then one representative per family (merged
-# battery entries stand in for their granular siblings), rows-only scale
-# paths, and finally the long tail of siblings already covered by an
-# in-window representative + pytest.
+# Static head of the registration order: the flagships, the e2e parity
+# entries and one representative per headline family come first, so a
+# consumer that checks only a prefix of ``entries()`` still covers every
+# headline family. Everything else follows in registration order.
 _PRIORITY: tuple[str, ...] = (
-    # ROUND 7 SHRINK (VERDICT r6 #1): the pinned core used to hold 43
-    # entries, leaving only 7 rotation slots per round — at that rate the
-    # 175 never-driver-checked tail entries needed ~25 more rounds. The
-    # core now pins only the flagships / e2e parity / one representative
-    # per headline family (each already driver-certified in multiple
-    # prior rounds); everything displaced moved to the rotation pool
-    # (ledger-driven, least-recently-checked first), and the freed slots
-    # (50 - len(_PRIORITY) = 36) go to the never-checked tail — which is
-    # now mostly condensed into union-tagged FAMILY BATTERIES
-    # (plans/family_batteries.py) so one slot hash-certifies a whole
-    # family per round.
     "pricing_summary",
     "hpv_pipeline_e2e",
     "llm_corpus_pipeline_portable",
@@ -93,465 +85,6 @@ _PRIORITY: tuple[str, ...] = (
     "image_pixel_stats",
     "knn_graph",
 )
-
-# Rotation segment (ADVICE r3): the driver's oracle gate checks a
-# bounded prefix (~50 entries) of the registration order, so families
-# displaced by new showcases used to lose driver-level verification
-# permanently. The pool below holds oracle-green entries whose families
-# already have a pinned in-window representative; each round _ROUND is
-# bumped and the rotation slots take the next cyclic slice of the pool,
-# so every pooled entry regains a driver-level oracle check every
-# ceil(len(pool)/slots) rounds. Out-of-window pool entries stay
-# oracle-checked by the in-repo mirror (tests/test_catalog_oracle.py +
-# scripts/driver_emulation.py).
-def _ledger_files() -> list[tuple[int, str]]:
-    """(round N, path) of every CORRECTNESS_r{N}.json at the repo root.
-    The ledgers are COMMITTED (ADVICE r5: a checkout without them used
-    to silently reset the rotation); absence therefore indicates a
-    broken deployment and warns loudly instead of silently degrading."""
-    import glob
-    import os
-    import re
-    import warnings
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = [
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    if not out:
-        warnings.warn(
-            "no CORRECTNESS_r*.json ledgers found at the repo root — "
-            "they are committed artifacts; without them the rotation "
-            "scheduler treats EVERY pool entry as never-checked "
-            "(harmless but re-verifies stale slices). Check the "
-            "deployment layout.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return sorted(out)
-
-
-def _current_round() -> int:
-    """Derive the round number from the driver's own CORRECTNESS ledger:
-    current round = max recorded N + 1. Removes the bump-_ROUND-by-hand
-    step that the round-4 ADVICE flagged as a footgun. Falls back to 5
-    (the round this mechanism shipped) when the ledger isn't visible —
-    with a RuntimeWarning from :func:`_ledger_files` (ADVICE r5)."""
-    ns = [n for n, _ in _ledger_files()]
-    return max(ns) + 1 if ns else 5
-
-
-def _ledger_last_checked() -> dict[str, int]:
-    """entry name → latest round whose CORRECTNESS_r{N}.json recorded a
-    driver-level check of it (regardless of pass/fail — a failed check
-    still ran; re-prioritizing failures is the builder's job, not the
-    scheduler's). Entries absent from every ledger were NEVER
-    driver-checked.
-
-    Round 8 (VERDICT r7 #2): a FAMILY BATTERY check certifies every
-    granular sibling it unions (battery ≡ union-of-siblings, pinned in
-    tests/test_family_batteries.py), so a sibling inherits the round of
-    its battery's check. Without this the scheduler kept spending
-    rotation slots on already-battery-certified siblings while ~20
-    heavy granular entries (ANN index builds, graph family, pair
-    listings) never got their own CORRECTNESS row."""
-    import json
-
-    last: dict[str, int] = {}
-    for n, p in _ledger_files():
-        try:
-            with open(p) as fh:
-                recorded = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name in recorded:
-            last[name] = max(last.get(name, -1), n)
-    try:  # lazy: battery specs are plain data, but stay import-light
-        from .plans.battery_specs import BATTERY_SPECS
-
-        for bat, spec in BATTERY_SPECS.items():
-            if bat in last:
-                for sib in spec["siblings"]:
-                    last[sib] = max(last.get(sib, -1), last[bat])
-    except ImportError:  # pragma: no cover — partial checkout
-        pass
-    return last
-
-
-_ROUND = _current_round()  # auto-derived; see _current_round
-_ROTATION_SLOTS = 50 - len(_PRIORITY)  # driver gate window is 50
-_ROTATION_POOL: tuple[str, ...] = (
-    # Pool ORDER is only a tie-break: the scheduler (_rotation_window)
-    # is ledger-driven — never-driver-checked entries first, then
-    # least-recently-checked. Sections below group the tie-break order:
-    # (1) round-7 FAMILY BATTERIES (plans/family_batteries.py) — each
-    #     certifies every granular sibling it unions, so they take the
-    #     first never-checked slots;
-    # (2) round-7/round-6 new granular entries (first-round-certify
-    #     convention, VERDICT r5 #2);
-    # (3) the long tail (granular siblings stay registered for users
-    #     and the in-repo sf0.001/sf0.01 mirrors);
-    # (4) entries displaced from the round-7 _PRIORITY shrink (all
-    #     driver-certified in earlier rounds - they sort to the back).
-    "tpch_battery_a",
-    "tpch_battery_b",
-    "tpch_battery_c",
-    "assoc_stats_battery",
-    "robust_stats_battery",
-    "hypothesis_test_battery",
-    "experiment_battery",
-    "mleval_battery",
-    "timeseries_corr_battery",
-    "timeseries_model_battery",
-    "engagement_battery",
-    "governance_battery",
-    "survival_session_battery",
-    "sketch_battery",
-    "layout_ops_battery",
-    "io_sampling_battery",
-    "text_stats_battery",
-    "text_search_battery",
-    "concentration_battery",
-    "sql_surface_battery",
-    "json_graph_battery",
-    "corpus_ops_battery",
-    "image_battery",
-    # -- (2) newest granular entries --
-    # round 9, session 3 (DSIR selection, passage dedup, BPE encode,
-    # composed select pipeline — first-round-certify convention):
-    "dsir_importance_weights",
-    "dsir_resample_topk",
-    "dsir_stratified_topk",
-    "dsir_mixture_shift",
-    "dsir_scores_stream_final",
-    "dup_passage_spans",
-    "dup_passage_doc_stats",
-    "corpus_strip_duplicate_passages",
-    "passage_strip_incremental",
-    "bpe_encode_corpus",
-    "llm_corpus_pipeline_select",
-    "decontam_passage_scrub",
-    "training_shard_plan",
-    # round 9:
-    "quality_classifier_train",
-    "quality_classifier_score",
-    "classifier_gated_corpus",
-    "quality_classifier_cv",
-    "lang_classifier_confusion",
-    "quality_scores_stream_final",
-    "ols_normal_equations",
-    "ridge_normal_equations",
-    "pca_top_component",
-    "pca_top2_components",
-    "pca_projection_hist",
-    "kmeans_cluster_profile",
-    "bpe_train_merges",
-    "bpe_token_counts",
-    "dedup_shingles_scaled",
-    "dedup_auto_survivors",
-    "ann_ivf_autorebuild",
-    # round 8:
-    "embedding_neardup_scaled",
-    "corpus_epoch_shuffle_bucketed",
-    "video_codec_census",
-    "dedup_minhash_shingles",
-    "embedding_dedup_survivors",
-    "embedding_dedup_survivors_scaled",
-    # round 7:
-    "video_mjpeg_frame_stats",
-    "mixture_reweight_rounds",
-    "ann_ivf_append",
-    # round 6:
-    "dedup_cluster_sizes_indexed",
-    "clustering_coefficient_sampled",
-    "ab_stats_stream",
-    "jpeg_coeff_roundtrip",
-    "jpeg_dc_pixel_stats",
-    "cuped_stream",
-    "unigram_ce_bands",
-    "bottomk_quantile_stream",
-    "filter_funnel_report",
-    "mixture_rebalance_plan",
-    # round 7, late (after this round's window was verified — first
-    # driver check lands in round 8):
-    "dedup_minhash_scaled",
-    # -- (3) long tail --
-    "incremental_matview_orders",
-    "array_funcs_battery",
-    "cohort_retention",
-    "decontamination_check",
-    "math_funcs_battery",
-    "bool_agg_flags",
-    "audio_signal_stats",
-    "doc_funcs_battery",
-    "ewma_user_values",
-    "bitmap_distinct_events",
-    "corpus_epoch_shuffle",
-    "pivot_lineitem_status",
-    "deterministic_sample",
-    "dq_report_orders",
-    "asof_join_next_purchase",
-    "equidepth_histogram_prices",
-    "mad_outliers_events",
-    "lateness_profile",
-    "cms_frequency_portable",
-    "chunk_dedup_ratio",
-    "q10_returned_items",
-    "q13_order_count_distribution",
-    "q11_value_concentration",
-    "ann_pq_topk",
-    "map_funcs_battery",
-    "corr_battery",
-    "conversion_lag_stats",
-    "repetition_scores",
-    "regex_funcs_battery",
-    "explode_token_counts",
-    "image_ahash_fingerprint",
-    "event_funcs_battery",
-    "fold_assignment_leakfree",
-    "psi_value_drift",
-    "corpus_mixture_sample",
-    "isotonic_calibration_pav",
-    "weighted_median_price",
-    "theil_sen_daily_trend",
-    "js_divergence_drift",
-    "rfm_segments",
-    "bpe_merge_candidates",
-    "transition_entropy",
-    "dedup_components_portable",
-    "q14_promo_revenue",
-    "q16_supplier_diversity",
-    "q12_priority_by_status",
-    "embedding_neardup_pairs",
-    "pagerank_orders_graph",
-    "kmv_set_algebra_portable",
-    "dau_wau_stickiness",
-    "tfidf_terms",
-    "string_agg_segments",
-    "image_dedup_ahash",
-    "join_semi_anti",
-    "skyline_parts",
-    "sequence_packing",
-    "latest_per_key",
-    "feature_scaling_battery",
-    "in_subquery_big_spenders",
-    "scd2_user_events",
-    "multimodal_decode_meta",
-    "interval_containment_join",
-    "dedup_exact_subset",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q15_top_supplier",
-    "vector_stats",
-    "per_group_trend",
-    "null_funcs_battery",
-    "event_transition_matrix",
-    "image_thumbnail_resize",
-    "part_funcs_battery",
-    "twap_events",
-    "weighted_sample_docs",
-    "profile_customers",
-    "reconcile_orders_drift",
-    "join_anti",
-    "shingle_span_pairs",
-    "stream_session_windows",
-    "interval_union_length",
-    "ngram_jaccard_pairs",
-    "q6_forecast_revenue",
-    "q22_dormant_accounts",
-    "q17_small_quantity_revenue",
-    "pivot_multi_agg",
-    "percentile_battery",
-    "funnel_conversion",
-    "video_frame_stats",
-    "window_frames",
-    "split_documents",
-    "join_left_outer",
-    "zorder_key_orders",
-    "stream_sliding_counts",
-    "join_size_estimate_cms",
-    "text_fingerprint",
-    "q4_priority_with_returns",
-    "q20_volume_shippers",
-    "resample_ffill_hourly",
-    "posexplode_map_battery",
-    "user_journey_paths",
-    "stratified_sample_events",
-    "join_semi",
-    "stream_tumbling_counts",
-    "sessionize_events",
-    "text_lang_id",
-    "q7_nation_volume",
-    "q21_sole_fault_supplier",
-    "window_analytics",
-    "sampled_quantile_portable",
-    "weekly_top_movers",
-    "json_extract_events",
-    "text_pii_scrub",
-    "q2_min_cost_supplier",
-    "window_cumulative_distinct",
-    "stack_unpivot_part",
-    "json_variant_events",
-    "text_quality",
-    "q8_market_share",
-    "lateral_topk_orders",
-    "text_token_stats",
-    "q9_product_profit",
-    "recursive_ancestor_depth",
-    "text_winnowing",
-    "scalar_subquery_above_avg",
-    "setop_except",
-    "setop_intersect",
-    "setop_union_distinct",
-    "sort_limit_top_orders",
-    "string_funcs_part",
-    "variant_extract_events",
-    "window_lag_delta",
-    "window_running_sum",
-    "window_trailing_range",
-    "ann_ivf_indexed",
-    "ann_pq_indexed",
-    "ewma_stream_twin",
-    "k_anonymity_census",
-    "containment_pairs",
-    "dow_seasonality_events",
-    "fuzzy_neighborhood_pairs",
-    "cdc_matview_events",
-    "l_diversity_census",
-    "hll_distinct_portable",
-    "pmi_token_pairs",
-    "purged_timeseries_cv",
-    "benford_digit_profile",
-    "lsh_recall_eval",
-    "ks_test_drift",
-    "zonemap_prune_stats",
-    "target_encoding_loo",
-    "bfs_hops_copurchase",
-    "hll_sliding_distinct",
-    "ols_segment_trend",
-    "token_entropy_by_source",
-    "prefix_filter_jaccard_pairs",
-    "phrase_search_docs",
-    "roundtrip_json_events",
-    "roundtrip_orc_events",
-    "roundtrip_csv_events",
-    "compaction_plan_events",
-    "join_skew_report",
-    "hilbert_key_orders",
-    "hilbert_prune_stats",
-    "cusum_user_cents",
-    "bootstrap_ci_mean",
-    "auc_purchase_score",
-    "decile_lift_table",
-    "touch_attribution",
-    "t_closeness_census",
-    "ndcg_user_ranking",
-    "kaplan_meier_userlife",
-    "acf_daily_cents",
-    "gapfill_linear_interp",
-    "chi_square_independence",
-    "pr_curve_deciles",
-    "calibration_bins_brier",
-    "holt_linear_trend",
-    "logrank_test_userlife",
-    "permutation_test_cents",
-    "conformal_interval_cents",
-    "seasonal_decompose_weekly",
-    "srm_assignment_check",
-    "itemsim_cosine_topk",
-    "quantile_normalize_sources",
-    "trimmed_mean_cents",
-    "oov_rate_by_source",
-    "diff_in_diff_cents",
-    "cuped_variance_reduction",
-    "ab_power_mde",
-    "gini_customer_revenue",
-    "burstiness_user_interarrival",
-    "ccf_purchase_view_daily",
-    "mann_kendall_daily_trend",
-    "mi_event_type_dow",
-    "lorenz_revenue_deciles",
-    "readability_flesch",
-    "zipf_exponent_tokens",
-    "durbin_watson_daily",
-    "hhi_segment_concentration",
-    "huber_location_cents",
-    "cohort_ltv_curves",
-    "dp_noisy_counts",
-    "spearman_purchase_view",
-    "kendall_tau_daily",
-    "ohlc_daily_bars",
-    "hill_tail_index",
-    "abc_classification_parts",
-    "negative_samples_per_user",
-    "anomaly_days_seasonal",
-    "sentinel_clean_events",
-    "histogram_prices",
-    "fd_profile_lineitem",
-    "date_trunc_orders",
-    "fuzzy_blocked_pairs",
-    "multimodal_byte_histogram",
-    "copurchase_triangles",
-    "weighted_quantiles_price",
-    "qini_uplift_deciles",
-    "degree_assortativity_copurchase",
-    "clustering_coefficient_copurchase",
-    "winsorized_mean_cents",
-    "forecast_backtest_naive",
-    "dedup_cluster_sizes",
-    "pointbiserial_engagement_conversion",
-    "abc_by_segment",
-    # -- (4) displaced from _PRIORITY in round 7 --
-    "asof_join_signup",
-    "sql_grouping_sets",
-    "nullsafe_join_segments",
-    "unpivot_part",
-    "cube_pricing_rollup",
-    "join_fact_fact",
-    "salted_fact_join",
-    "date_funcs_battery",
-    "agg_battery",
-    "kmv_distinct_portable",
-    "bm25_topk_docs",
-    "global_index_orders",
-    "bloom_semijoin_portable",
-    "market_basket_rules",
-    "grid_neighbor_join",
-    "rolling_zscore_events",
-    "corpus_datasheet",
-    "golden_record_parts",
-    "dedup_exact_content",
-    "dedup_incremental",
-    "dedup_simhash_portable",
-    "embedding_quantize_int8",
-    "knn_brute_force",
-    "embedding_neardup_blocked",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "multimodal_binary_stats",
-    "ab_welch_ttest",
-    "hybrid_rrf_docs",
-)
-
-
-def _rotation_window() -> tuple[str, ...]:
-    """VERDICT r5 #3: never-driver-checked entries first. The cyclic
-    slice took >30 rounds to give every pooled entry a FIRST driver
-    check; instead the slice is now the _ROTATION_SLOTS pool entries
-    with the OLDEST driver-level check (never-checked = -1, i.e.
-    first), tie-broken by pool order. Self-advancing: this round's
-    slice lands in CORRECTNESS_r{N}.json, so next round it sorts to the
-    back — least-recently-verified always cycles forward, and every
-    pool entry is re-checked within ceil(|pool|/slots) rounds of its
-    last check (asserted in tests/test_catalog_oracle.py)."""
-    last = _ledger_last_checked()
-    order = sorted(
-        range(len(_ROTATION_POOL)),
-        key=lambda i: (last.get(_ROTATION_POOL[i], -1), i),
-    )
-    return tuple(_ROTATION_POOL[i] for i in order[:_ROTATION_SLOTS])
 
 
 def _ensure_populated() -> None:
@@ -572,11 +105,10 @@ def _ensure_populated() -> None:
 
     register_all.populate(register)
 
-    window = _PRIORITY + _rotation_window()
-    missing = [n for n in window if n not in _ENTRIES]
+    missing = [n for n in _PRIORITY if n not in _ENTRIES]
     if missing:
         raise ValueError(f"priority entries not registered: {missing}")
-    ordered = {n: _ENTRIES[n] for n in window}
+    ordered = {n: _ENTRIES[n] for n in _PRIORITY}
     ordered.update({n: e for n, e in _ENTRIES.items() if n not in ordered})
     _ENTRIES = ordered
     _POPULATED = True

@@ -148,9 +148,18 @@ def write_once(spark, name: str, content_key: str, write) -> str:
     node-local tempdirs could not be read back."""
     path = _artifact_path(spark, name, _key_digest(content_key))
     with _key_lock((spark.sparkContext.applicationId, name, path)):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        if not _is_written(spark, path):
             write(path)
     return path
+
+
+def _is_written(spark, path: str) -> bool:
+    """``<path>/_SUCCESS`` exists, tested through the path's Hadoop
+    FileSystem so ``file://``, ``hdfs://`` and ``s3a://`` paths resolve
+    the way the writer resolved them (``os.path`` sees none of them)."""
+    sc = spark.sparkContext
+    marker = sc._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    return marker.getFileSystem(sc._jsc.hadoopConfiguration()).exists(marker)
 
 
 def _key_digest(content_key: str) -> str:

@@ -14,7 +14,6 @@ def populate(register) -> None:  # noqa: ANN001 — see catalog.register
         behavior_queries,
         corpus_pipeline,
         decontam_queries,
-        family_batteries,
         format_queries,
         func_batteries2,
         governance_queries,
@@ -90,5 +89,3 @@ def populate(register) -> None:  # noqa: ANN001 — see catalog.register
     train_queries.register_entries(register)
     timeseries_queries.register_entries(register)
     robust_queries.register_entries(register)
-    # family batteries LAST — they compose the granular entries above
-    family_batteries.register_entries(register)

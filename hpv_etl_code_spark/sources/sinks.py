@@ -16,8 +16,18 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an observed row count: once an action on the returned
+    frame has run, ``obs.get["rows"]`` is the rows that action produced.
+    Writers return it instead of re-reading the destination, which costs
+    a scan and, after a dynamic partition overwrite, also counts the
+    partitions the write left alone."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def overwrite_parquet(
@@ -28,13 +38,14 @@ def overwrite_parquet(
 ) -> int:
     """Truncate-and-load a parquet destination; returns rows written
     (the reference prints this count, database_util.py:54)."""
-    writer = df.write.mode("overwrite")
+    out, obs = _counted(df)
+    writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
         if dynamic:
             writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
-    return df.sparkSession.read.parquet(path).count()
+    return obs.get["rows"]
 
 
 def overwrite_jdbc(
@@ -95,11 +106,12 @@ def overwrite_orc(
     alternative to parquet — same commit-protocol atomicity, same
     predicate pushdown / column pruning at the scan). Returns rows
     written."""
-    writer = df.write.mode("overwrite")
+    out, obs = _counted(df)
+    writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
-    return df.sparkSession.read.orc(path).count()
+    return obs.get["rows"]
 
 
 def overwrite_jsonl(df: DataFrame, path: str) -> int:
@@ -107,8 +119,9 @@ def overwrite_jsonl(df: DataFrame, path: str) -> int:
     of LLM corpus tooling. Row-oriented: no column pruning at the scan,
     so it's an EDGE format (ingest/export), not a pipeline-internal one;
     convert to parquet/ORC before heavy queries. Returns rows written."""
-    df.write.mode("overwrite").json(path)
-    return df.sparkSession.read.json(path).count()
+    out, obs = _counted(df)
+    out.write.mode("overwrite").json(path)
+    return obs.get["rows"]
 
 
 def read_jsonl(spark, path: str, schema: str | None = None) -> DataFrame:

@@ -329,7 +329,7 @@ def test_cache_substitution_never_aliases_across_directories(
         pinned.unpersist()
 
 
-def test_write_once_needs_shared_dir_on_a_cluster(monkeypatch, tmp_path):
+def test_write_once_needs_shared_dir_on_a_cluster(spark, monkeypatch, tmp_path):
     """Executors of a cluster master cannot write a copy that is read
     back into node-local tempdirs: without a shared artifact dir
     write_once refuses and names the variable; with one it writes under
@@ -338,6 +338,9 @@ def test_write_once_needs_shared_dir_on_a_cluster(monkeypatch, tmp_path):
     class _Ctx:
         master = "spark://host:7077"
         applicationId = "app-cluster"
+        # the _SUCCESS check goes through a real Hadoop FileSystem
+        _jvm = spark.sparkContext._jvm
+        _jsc = spark.sparkContext._jsc
 
     class _Stub:
         sparkContext = _Ctx()
@@ -358,3 +361,21 @@ def test_write_once_needs_shared_dir_on_a_cluster(monkeypatch, tmp_path):
     assert artifacts.write_once(_Stub(), "replay", "ck", write) == path
     assert writes == [path]
     assert path.startswith(str(tmp_path / "app-cluster" / "replay_"))
+
+
+def test_write_once_sees_success_under_a_uri_dir(spark, monkeypatch, tmp_path):
+    """A ``file://`` artifact dir (as an ``hdfs://``/``s3a://`` one would)
+    must be recognized as already written: the second call reuses the
+    copy instead of rewriting it."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", f"file://{tmp_path}")
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        spark.range(3).write.mode("overwrite").parquet(path)
+
+    path = artifacts.write_once(spark, "uri_replay", "ck", write)
+    assert path.startswith(f"file://{tmp_path}/")
+    assert artifacts.write_once(spark, "uri_replay", "ck", write) == path
+    assert writes == [path]
+    assert spark.read.parquet(path).count() == 3

@@ -26,87 +26,10 @@ def test_catalog_entry_matches_oracle(spark, sf_dir, name):
         compare(df, e.oracle, sf_dir)
 
 
-def test_gate_window_composition():
-    """The driver checks ~50 entries in registration order; the priority
-    window must stay exactly 50, fully registered, in order, and
-    oracle-dense (rows-only in-window entries need an inherent reason)."""
-    from hpv_etl_code_spark import catalog
-
-    es = catalog.entries()
-    names = list(es)
-    window = catalog._PRIORITY + catalog._rotation_window()
-    assert len(window) == 50
-    assert names[:50] == list(window)
-    # rotation invariants: halves are disjoint from the pinned core and
-    # from each other, so every pooled entry is in-window every other
-    # round (ADVICE r3)
-    pool = catalog._ROTATION_POOL
-    assert len(pool) >= catalog._ROTATION_SLOTS
-    assert not set(pool) & set(catalog._PRIORITY)
-    assert len(set(pool)) == len(pool)
-    assert all(n in es for n in pool)
-    # VERDICT r5 #3: the ledger-driven scheduler visits every pool
-    # entry within ceil(n/slots) rounds — simulate: each round's slice
-    # is recorded as checked, which pushes it to the back of the order
-    import math
-
-    last = catalog._ledger_last_checked()
-    slots = catalog._ROTATION_SLOTS
-    rounds = math.ceil(len(pool) / slots) + 1
-    seen = set()
-    for r in range(catalog._ROUND, catalog._ROUND + rounds):
-        order = sorted(range(len(pool)), key=lambda i: (last.get(pool[i], -1), i))
-        sl = [pool[i] for i in order[:slots]]
-        seen.update(sl)
-        for n in sl:
-            last[n] = r
-    assert seen == set(pool)
-    rows_only = [n for n in names[:50] if es[n].oracle is None]
-    # round 3: the window is fully oracle-dense — the sketch slot is
-    # held by the portable KMV entry (exact DuckDB twin);
-    # approx_sketches (engine-internal HLL/KLL state) lives in the
-    # long tail with its error-envelope tests
-    assert rows_only == [], rows_only
-    # the sketch-family slot is held by the portable entries (exact
-    # DuckDB twins — kmv_distinct_portable pinned through round 6, the
-    # sketch_battery thereafter); approx_sketches (engine-internal
-    # HLL/KLL state, rows-only by design) must never take a window slot
-    assert "approx_sketches" in names[50:]
-
-
-def test_rotation_slice_prefers_never_checked_entries():
-    """VERDICT r5 #3 done-criterion: while ANY pool entry has never
-    appeared in a CORRECTNESS_r*.json ledger, the current round's slice
-    must contain ONLY such entries (least-recently-checked ordering
-    degrades gracefully once the pool has full first-check coverage)."""
-    pool = catalog._ROTATION_POOL
-    last = catalog._ledger_last_checked()
-    never = [n for n in pool if last.get(n, -1) < 0]
-    window = catalog._rotation_window()
-    assert len(window) == catalog._ROTATION_SLOTS
-    if len(never) >= catalog._ROTATION_SLOTS:
-        assert all(n in never for n in window), (window, never[:10])
-        # and specifically the FIRST never-checked entries in pool order
-        assert list(window) == never[: catalog._ROTATION_SLOTS]
-
-
-def test_rotation_pool_entries_stay_oracle_backed():
-    """VERDICT r4 #8: a pool entry that silently lost its oracle would
-    previously only surface in the round it rotated into the window.
-    Guard: every rotation-pool entry must carry an oracle at
-    registration time (the sf0.001 mirror above then hash-checks it
-    every test run), and the pool must cover the ENTIRE oracle-green
-    tail — nothing oracle-backed is permanently out of driver reach."""
-    es = catalog.entries()
-    pool = catalog._ROTATION_POOL
-    missing_oracle = [n for n in pool if es[n].oracle is None]
-    assert missing_oracle == [], missing_oracle
-    tail_green = {
-        n for n, e in es.items()
-        if e.oracle is not None and n not in catalog._PRIORITY
-    }
-    assert set(pool) == tail_green, (
-        set(pool) ^ tail_green
+def test_priority_entries_lead_the_order():
+    """The static _PRIORITY head leads the catalog order."""
+    assert list(catalog.entries())[: len(catalog._PRIORITY)] == list(
+        catalog._PRIORITY
     )
 
 

@@ -20,15 +20,7 @@ from hpv_etl_code_spark.sources.registry import load_table
 # REGISTRY-DRIVEN (VERDICT r6 #8): every catalog entry runs against the
 # NULL-heavy tables BY DEFAULT; exceptions live in SKIP with a
 # documented reason (asserted non-empty below).
-from hpv_etl_code_spark.plans.battery_specs import BATTERY_SPECS
-
 SKIP: dict[str, str] = {
-    **{
-        b: "family battery: the tagged union of its siblings, each of "
-           "which is exercised individually by this suite — running the "
-           "battery would re-run every sibling for no new coverage"
-        for b in BATTERY_SPECS
-    },
     "hpv_pipeline_e2e": "reads the repo's bundled HPV sheet fixtures "
         "(reference parity requires byte-identical input), not the ten "
         "parquet tables this fixture NULLs; its own dirty-input coverage "

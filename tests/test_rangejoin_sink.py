@@ -76,7 +76,8 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     overwrite_parquet(df1, path, partition_by=["day"])
     # overwrite ONLY the 01-02 partition; 01-01 must survive
     df2 = spark.createDataFrame([(99, "2024-01-02")], ["v", "day"])
-    overwrite_parquet(df2, path, partition_by=["day"], dynamic=True)
+    # the return value counts the rows this write produced, not the table
+    assert overwrite_parquet(df2, path, partition_by=["day"], dynamic=True) == 1
     # partition columns are type-inferred on read ("day" becomes DATE)
     got = {(r.v, str(r.day)) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "2024-01-01"), (99, "2024-01-02")}
