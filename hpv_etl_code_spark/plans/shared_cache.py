@@ -306,8 +306,9 @@ def incremental_grouped(
     tokset's toks/sig don't depend on which split its members landed
     in; ``gn`` is recounted per split), both persisted. ``corpus_fps``
     reads the narrow enriched frame; ``new_docs`` carries (id, text,
-    fp, gkey) straight off the batch slice of ``documents`` — the only
-    full-text frame here, and it is batch-sized."""
+    fp, gkey) off the batch slice of ``documents`` — the only full-text
+    frame here, batch-sized, and staged like its siblings so a repeat
+    call reads no parquet schema and analyzes no text expression."""
     members, groups = grouped_corpus(spark, sf_dir)
 
     def split_groups(name: str, pred: Column) -> DataFrame:
@@ -315,12 +316,17 @@ def incremental_grouped(
             spark, lambda: _regroup(members.filter(pred), groups), name, sf_dir
         )
 
-    d = load_table(spark, sf_dir, "documents")
-    new_docs = d.filter(F.col("doc_id") % 5 == 0).select(
-        F.col("doc_id").alias("id"),
-        "text",
-        F.md5(F.col("text")).alias("fp"),
-        _gkey(_hashed_toks("text")).alias("gkey"),
+    def build_new_docs() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        return d.filter(F.col("doc_id") % 5 == 0).select(
+            F.col("doc_id").alias("id"),
+            "text",
+            F.md5(F.col("text")).alias("fp"),
+            _gkey(_hashed_toks("text")).alias("gkey"),
+        )
+
+    new_docs = stage_artifact_from(
+        spark, build_new_docs, "shared_incr_new_docs", sf_dir
     )
     corpus_fps = (
         enriched_documents(spark, sf_dir)

@@ -1,26 +1,38 @@
-"""Custom stateful streaming operator: event-time sessionization.
+"""Custom stateful streaming operators: per-key folds over a stream via
+``applyInPandasWithState``.
 
-``session_window`` (streaming/windows.py) covers the built-in case;
-this module is the template for semantics the built-ins CANNOT express
-(per-session custom payloads, conditional session splits, CDC-style
-state machines): arbitrary per-key state via ``applyInPandasWithState``
-with EVENT-TIME timeouts.
+``session_window`` (streaming/windows.py) covers the built-in windowed
+case; this module carries what the built-ins CANNOT express — arbitrary
+per-key state (sessions, running statistics, sketches, per-shard
+moments). State is one small tuple per active key, so memory is bounded
+by active keys, not history — the property that lets a stream run
+forever — and every operator reproduces a batch twin over the same
+prefix (locked in tests/test_stateful_*.py).
 
-Mechanics:
-- state per user = the one open session ``(start, last_ts, n, sum)``;
-- each micro-batch extends or closes it (gap exceeded → emit closed
-  session, open a new one);
-- the event-time timeout fires when the WATERMARK passes
-  ``last_ts + gap`` — closing sessions whose user went quiet, which a
-  batch operator can never do incrementally;
-- state is one tiny tuple per active user: memory is bounded by active
-  keys, not history — the property that makes this run forever.
+One driver. Every operator except :func:`sessionize_stream` is a
+NO-TIMEOUT fold wired by :func:`_fold_by_key`: ``ensure_event_time`` →
+``groupBy(key)`` → ``applyInPandasWithState(..., NoTimeout)``. A
+no-timeout fold takes no watermark: Spark drops late rows for this
+operator only under ``EventTimeTimeout``, so a watermark would change
+nothing — a row behind it is folded like any other
+(tests/test_stateful_nulls.py pins this). The five row-at-a-time folds
+(EWMA, CUSUM, Holt, burstiness, OHLC) share one skeleton,
+:func:`_row_fold`, and differ only in an initial state, a per-row step
+and an emit function.
 
-Ordering contract: events for a key must arrive non-decreasing in time
-ACROSS micro-batches (within a batch they are sorted here). The file
-source preserves file order; out-of-order arrivals within the watermark
-would need a buffer-in-state variant (same skeleton, state holds a
-small heap).
+:func:`sessionize_stream` is the one watermarked operator: its
+EVENT-TIME timeout fires when the watermark passes ``last_ts + gap``,
+closing sessions whose user went quiet — which a batch operator can
+never do incrementally.
+
+Ordering contract of the order-sensitive folds (sessions, z-score,
+EWMA, CUSUM, Holt, burstiness, OHLC): events for a key must arrive
+non-decreasing in time ACROSS micro-batches (within a batch they are
+sorted here). The file source preserves file order; out-of-order
+arrivals would need a buffer-in-state variant (same skeleton, state
+holds a small heap). The A/B, CUPED and bottom-k folds are exact
+order-free sums and samples, so any arrival order gives the same final
+row.
 """
 
 from __future__ import annotations
@@ -28,10 +40,10 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -45,6 +57,98 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .windows import ensure_event_time
+
+# ------------------------------------------------------ shared machinery
+
+
+def _fold_by_key(
+    stream_df: DataFrame,
+    key: str | Column,
+    fold,
+    out_schema: StructType,
+    state_schema: StructType,
+    mode: str = "update",
+) -> DataFrame:
+    """The one no-timeout stateful driver: ``fold(key, pdfs, state)``
+    per group of ``key`` — a column name, or a derived Column grouped
+    as ``__key``. No watermark: without an event-time timeout Spark
+    drops no late row, so one would change nothing."""
+    df = ensure_event_time(stream_df, "ts")
+    if not isinstance(key, str):
+        df, key = df.withColumn("__key", key), "__key"
+    return df.groupBy(key).applyInPandasWithState(
+        fold,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _row_fold(
+    out_schema: StructType,
+    column: str,
+    init: tuple,
+    step: Callable[[tuple, object], tuple],
+    emit: Callable[[object, tuple], tuple | None],
+):
+    """The row-at-a-time fold: resume from the key's state (or
+    ``init``), sort each batch by ``(ts, event_id)`` — the batch twins'
+    order — apply ``step(state, x)`` to each row's ``column`` value,
+    save the state and emit ``emit(key, state)`` (``None``: no row)."""
+
+    def fold(
+        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = tuple(state.get) if state.exists else init
+        for pdf in pdf_iter:
+            for x in pdf.sort_values(["ts", "event_id"])[column]:
+                st = step(st, x)
+        state.update(st)
+        row = emit(key[0], st)
+        yield pd.DataFrame([] if row is None else [row], columns=out_schema.names)
+
+    return fold
+
+
+def _round6_half_up(x: float | None) -> float | None:
+    """Spark's round(double, 6): shortest-repr decimal, HALF_UP — NOT
+    Python's banker's round (round(0.5) == 0 would diverge). NULL stays
+    NULL."""
+    if x is None:
+        return None
+    return float(
+        decimal.Decimal(repr(x)).quantize(
+            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
+        )
+    )
+
+
+def _float_or_none(val) -> float | None:
+    """A SQL NULL arrives as NaN (float64 column) or None (object
+    column); both become None."""
+    return None if val is None or pd.isna(val) else float(val)
+
+
+def _cents_or_none(val) -> int | None:
+    """value → integer cents with the same HALF_UP semantics as the
+    batch path's CAST(value AS DECIMAL(12,2)) * 100 (2-decimal inputs
+    are exact; repr() gives the shortest-repr digits both casts see);
+    a SQL NULL stays None."""
+    x = _float_or_none(val)
+    if x is None:
+        return None
+    return int(
+        decimal.Decimal(repr(x)).quantize(
+            decimal.Decimal("0.01"), rounding=decimal.ROUND_HALF_UP
+        )
+        * 100
+    )
+
+
+# ------------------------------------------------------ sessionization
 
 SESSION_SCHEMA = StructType(
     [
@@ -147,26 +251,21 @@ def _parse_gap(gap: str) -> int:
 
 
 def sessionize_stream(
-    stream_df: DataFrame,
-    gap: str = "4 hours",
-    gap_seconds: int | None = None,
-    watermark: str = "1 hour",
+    stream_df: DataFrame, gap: str = "4 hours", watermark: str = "1 hour"
 ) -> DataFrame:
-    """Emit CLOSED sessions (user, start, end, n, sum) as they expire.
+    """Emit CLOSED sessions (user, start, end, n, sum) as they expire:
+    per user the one open session ``(start, last_ts, n, sum)``; a row
+    past ``gap`` closes it and opens the next, and the event-time
+    timeout closes it once the ``watermark`` passes ``last_ts + gap``.
 
     Input must carry ``user_id``, ``ts`` (event time), ``value``.
-    ``gap`` is parsed into seconds unless ``gap_seconds`` overrides it.
     """
-    if gap_seconds is None:
-        gap_seconds = _parse_gap(gap)
-    from .windows import ensure_event_time
-
     return (
         ensure_event_time(stream_df, "ts")
         .withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_sessionizer(gap_seconds),
+            _make_sessionizer(_parse_gap(gap)),
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
@@ -187,19 +286,7 @@ ZSCORE_SCHEMA = StructType(
 _ZSTATE_SCHEMA = StructType([StructField("cents", ArrayType(LongType()))])
 
 
-def _round6_half_up(x: float) -> float:
-    """Spark's round(double, 6): shortest-repr decimal, HALF_UP — NOT
-    Python's banker's round (round(0.5) == 0 would diverge)."""
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
 def _make_zscorer(window: int, min_n: int):
-    import math
-
     def score(
         key: tuple,
         pdf_iter: Iterator[pd.DataFrame],
@@ -242,34 +329,18 @@ def _make_zscorer(window: int, min_n: int):
                         else:
                             z = (val - mean) / math.sqrt(var)
                             out.append((int(eid), etype, _round6_half_up(z)))
-                if is_null:
-                    buf.append(None)
-                else:
-                    # mirror the batch twin's CAST(value AS
-                    # DECIMAL(12,2)): HALF_UP on the shortest decimal
-                    # repr, kept as cents
-                    buf.append(
-                        int(
-                            decimal.Decimal(repr(val)).quantize(
-                                decimal.Decimal("0.01"),
-                                rounding=decimal.ROUND_HALF_UP,
-                            )
-                            * 100
-                        )
-                    )
+                # the batch twin's CAST(value AS DECIMAL(12,2)), as cents
+                buf.append(_cents_or_none(val))
                 if len(buf) > window:
                     buf.pop(0)
         state.update((buf,))
-        yield pd.DataFrame(out, columns=["event_id", "event_type", "z"])
+        yield pd.DataFrame(out, columns=ZSCORE_SCHEMA.names)
 
     return score
 
 
 def zscore_stream(
-    stream_df: DataFrame,
-    window: int = 12,
-    min_n: int = 6,
-    watermark: str = "1 hour",
+    stream_df: DataFrame, window: int = 12, min_n: int = 6
 ) -> DataFrame:
     """Streaming rolling z-score: each event scored against its user's
     trailing ``window`` observations (causal — never against itself or
@@ -281,19 +352,9 @@ def zscore_stream(
 
     Ordering contract: same as :func:`sessionize_stream` — per-key
     event time non-decreasing across micro-batches (sorted within)."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_zscorer(window, min_n),
-            outputStructType=ZSCORE_SCHEMA,
-            stateStructType=_ZSTATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df, "user_id", _make_zscorer(window, min_n),
+        ZSCORE_SCHEMA, _ZSTATE_SCHEMA, mode="append",
     )
 
 
@@ -319,36 +380,28 @@ _EWMA_STATE_SCHEMA = StructType(
 def _make_ewma(alpha: float):
     b = 1.0 - alpha
 
-    def fold(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(st: tuple, val) -> tuple:
         # state = (n, ewma, last): O(1) per key — the stream NEVER holds
-        # history, which is the whole point vs the batch fold
-        n, acc, last = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for val in pdf["value"]:
-                val = float(val)
-                last = val
-                if n == 0:
-                    acc = val
-                else:
-                    # the simple-fold op chain verbatim — bit-identical
-                    # to ewma_simple_fold / the pre-segmentation entry
-                    acc = val * alpha + acc * b
-                n += 1
-        state.update((n, acc, last))
-        yield pd.DataFrame(
-            [(key[0], n, _round6_half_up(acc), _round6_half_up(last))],
-            columns=["user_id", "n_events", "ewma_value", "last_value"],
-        )
+        # history, which is the whole point vs the batch fold. The
+        # simple-fold op chain verbatim — bit-identical to
+        # ewma_simple_fold, whose NULL value poisons the fold from there on
+        n, acc, _ = st
+        x = _float_or_none(val)
+        if n == 0:
+            acc = x
+        elif x is None or acc is None:
+            acc = None
+        else:
+            acc = x * alpha + acc * b
+        return n + 1, acc, x
 
-    return fold
+    return _row_fold(
+        EWMA_SCHEMA, "value", (0, 0.0, 0.0), step,
+        lambda k, st: (k, st[0], _round6_half_up(st[1]), _round6_half_up(st[2])),
+    )
 
 
-def ewma_stream(stream_df: DataFrame, alpha: float = 0.2, watermark: str = "1 hour") -> DataFrame:
+def ewma_stream(stream_df: DataFrame, alpha: float = 0.2) -> DataFrame:
     """Streaming EWMA — the sequential recurrence folded as O(1) per-key
     state (``applyInPandasWithState``), emitting each user's updated
     (n, ewma, last) per micro-batch in update mode. Completes the EWMA
@@ -362,19 +415,8 @@ def ewma_stream(stream_df: DataFrame, alpha: float = 0.2, watermark: str = "1 ho
 
     Ordering contract: per-key event time non-decreasing across
     micro-batches (sorted within), as :func:`sessionize_stream`."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_ewma(alpha),
-            outputStructType=EWMA_SCHEMA,
-            stateStructType=_EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df, "user_id", _make_ewma(alpha), EWMA_SCHEMA, _EWMA_STATE_SCHEMA
     )
 
 
@@ -398,55 +440,28 @@ _CUSUM_STATE_SCHEMA = StructType(
 )
 
 
-def _cents_exact(val: float) -> int:
-    """value → integer cents with the same HALF_UP semantics as the
-    batch path's CAST(value AS DECIMAL(12,2)) * 100 (2-decimal inputs
-    are exact; repr() gives the shortest-repr digits both casts see)."""
-    return int(
-        decimal.Decimal(repr(float(val))).quantize(
-            decimal.Decimal("0.01"), rounding=decimal.ROUND_HALF_UP
-        )
-        * 100
+def _make_cusum(k: int, h: int):
+    def step(st: tuple, val) -> tuple:
+        # state = (n, s, mx): O(1) per key, EXACT integers — the stream
+        # is bit-identical to the segmented batch fold by construction
+        # (integer (max,+) has no reassociation seam at all). A NULL
+        # value is counted, as the batch's count(*), and leaves s as it
+        # is, as the DuckDB oracle's SUM window does (cusum_segments
+        # differs there: its null-skipping greatest() resets s to 0)
+        n, s, mx = st
+        cents = _cents_or_none(val)
+        if cents is not None:
+            s = max(0, s + cents - k)
+            mx = max(mx, s)
+        return n + 1, s, mx
+
+    return _row_fold(
+        CUSUM_SCHEMA, "value", (0, 0, 0), step,
+        lambda key, st: (key, *st, st[2] >= h),
     )
 
 
-def _make_cusum(k: int, h: int):
-    def fold(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # state = (n, s, mx): O(1) per key, EXACT integers — the stream
-        # is bit-identical to the segmented batch fold by construction
-        # (integer (max,+) has no reassociation seam at all)
-        n, s, mx = state.get if state.exists else (0, 0, 0)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for val in pdf["value"]:
-                if val is None or pd.isna(val):
-                    continue  # batch count('value') semantics: skip
-                z = _cents_exact(val) - k
-                s = max(0, s + z)
-                if s > mx:
-                    mx = s
-                n += 1
-        state.update((n, s, mx))
-        yield pd.DataFrame(
-            [(key[0], n, s, mx, mx >= h)],
-            columns=[
-                "user_id", "n_events", "final_cusum", "max_cusum", "alarmed"
-            ],
-        )
-
-    return fold
-
-
-def cusum_stream(
-    stream_df: DataFrame,
-    k: int,
-    h_mult: int = 8,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def cusum_stream(stream_df: DataFrame, k: int, h_mult: int = 8) -> DataFrame:
     """Streaming CUSUM drift alarm — the batch entry
     (plans/inference_queries.py::cusum_user_cents) as O(1)-state
     ``applyInPandasWithState``. The reference level ``k`` is a FIXED
@@ -458,19 +473,9 @@ def cusum_stream(
 
     Ordering contract: per-key event time non-decreasing across
     micro-batches (sorted within), as :func:`ewma_stream`."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_cusum(int(k), int(h_mult) * int(k)),
-            outputStructType=CUSUM_SCHEMA,
-            stateStructType=_CUSUM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df, "user_id", _make_cusum(int(k), int(h_mult) * int(k)),
+        CUSUM_SCHEMA, _CUSUM_STATE_SCHEMA,
     )
 
 
@@ -496,54 +501,38 @@ _HOLT_STATE_SCHEMA = StructType(
 
 
 def _make_holt(alpha: float, beta: float):
-    def fold(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(st: tuple, val) -> tuple:
         # state = (n, x1, level, trend): O(1) per key — the stream
         # needs no segmentation because its state never holds history;
-        # the op chain is the whole-history simple fold VERBATIM
-        # (timeseries_queries.holt_simple_fold), so the final per-user
-        # row is bit-identical to the batch fold over the same prefix
-        n, x1, lvl, trd = state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for val in pdf["value"]:
-                if val is None or pd.isna(val):
-                    continue  # dirty-data rule: skip, don't poison state
-                x = float(val)
-                if n == 0:
-                    x1, lvl, trd = x, x, 0.0
-                elif n == 1:
-                    lvl, trd = x, x - x1
-                else:
-                    lnew = alpha * x + (1.0 - alpha) * (lvl + trd)
-                    trd = beta * (lnew - lvl) + (1.0 - beta) * trd
-                    lvl = lnew
-                n += 1
-        state.update((n, x1, lvl, trd))
-        yield pd.DataFrame(
-            [
-                (
-                    key[0],
-                    n,
-                    _round6_half_up(lvl),
-                    _round6_half_up(trd),
-                    _round6_half_up(lvl + 3.0 * trd),
-                )
-            ],
-            columns=["user_id", "n_events", "level", "trend", "forecast_h3"],
-        )
+        # the op chain, NULLs included, is the whole-history simple fold
+        # VERBATIM (timeseries_queries.holt_simple_fold): seeds level =
+        # coalesce(x2, x1), trend = coalesce(x2 − x1, 0); a NULL later
+        # on makes level and trend NULL from there on
+        n, x1, lvl, trd = st
+        x = _float_or_none(val)
+        if n == 0:
+            x1, lvl, trd = x, x, 0.0
+        elif n == 1:
+            lvl = x1 if x is None else x
+            trd = 0.0 if x is None or x1 is None else x - x1
+        elif x is None or lvl is None:
+            lvl = trd = None
+        else:
+            lnew = alpha * x + (1.0 - alpha) * (lvl + trd)
+            trd = beta * (lnew - lvl) + (1.0 - beta) * trd
+            lvl = lnew
+        return n + 1, x1, lvl, trd
 
-    return fold
+    def emit(key, st: tuple) -> tuple:
+        n, _, lvl, trd = st
+        fc = None if lvl is None or trd is None else lvl + 3.0 * trd
+        return key, n, _round6_half_up(lvl), _round6_half_up(trd), _round6_half_up(fc)
+
+    return _row_fold(HOLT_SCHEMA, "value", (0, 0.0, 0.0, 0.0), step, emit)
 
 
 def holt_stream(
-    stream_df: DataFrame,
-    alpha: float = 0.3,
-    beta: float = 0.1,
-    watermark: str = "1 hour",
+    stream_df: DataFrame, alpha: float = 0.3, beta: float = 0.1
 ) -> DataFrame:
     """Streaming Holt level+trend smoothing — the batch entry
     (plans/timeseries_queries.py::holt_linear_trend) as O(1)-state
@@ -552,24 +541,14 @@ def holt_stream(
     stream's state is already two doubles, and it applies the simple
     whole-history op chain verbatim, so the final per-user row is
     BIT-IDENTICAL to holt_simple_fold over the same prefix (locked in
-    tests/test_stateful_holt.py) and matches the segmented batch entry
+    tests/test_stateful_holt.py, NULL values in
+    tests/test_stateful_nulls.py) and matches the segmented batch entry
     at the 6dp output contract.
 
     Ordering contract: per-key event time non-decreasing across
     micro-batches (sorted within), as :func:`ewma_stream`."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_holt(alpha, beta),
-            outputStructType=HOLT_SCHEMA,
-            stateStructType=_HOLT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df, "user_id", _make_holt(alpha, beta), HOLT_SCHEMA, _HOLT_STATE_SCHEMA
     )
 
 
@@ -594,75 +573,39 @@ _BURSTINESS_STATE_SCHEMA = StructType(
 )
 
 
-def _make_burstiness():
-    import math
-
-    def fold(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # state = (n_gaps, Σgap, Σgap², last_at): O(1) exact integers per
-        # key — the stream never holds the gap history the batch window
-        # lags over. Σgap² rides a 64-bit long: gaps of a year (~3·10⁷ s)
-        # square to ~10¹⁵, so ~10⁴ such gaps fit — beyond that the batch
-        # twin's DECIMAL(38,0) path is the reprocessing route.
-        n, s, q, last_at = state.get if state.exists else (0, 0, 0, None)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            # unix seconds, floor — the batch twin's unix_timestamp(ts)
-            ats = pdf["ts"].astype("int64") // 1_000_000_000
-            for at in ats:
-                at = int(at)
-                if last_at is not None:
-                    gap = at - last_at
-                    n += 1
-                    s += gap
-                    q += gap * gap
-                last_at = at
-        state.update((n, s, q, last_at))
-        if n >= 2:
-            # the batch entry's IEEE chain verbatim: μ = s/n,
-            # σ = √(double(n·q − s²))/n, B = (σ−μ)/(σ+μ), HALF_UP 6dp
-            nn = float(n)
-            mu = float(s) / nn
-            sigma = math.sqrt(float(n * q - s * s)) / nn
-            yield pd.DataFrame(
-                [
-                    (
-                        key[0],
-                        n,
-                        _round6_half_up(mu),
-                        _round6_half_up(sigma),
-                        _round6_half_up((sigma - mu) / (sigma + mu)),
-                    )
-                ],
-                columns=[
-                    "user_id",
-                    "n_gaps",
-                    "mean_gap_s",
-                    "sd_gap_s",
-                    "burstiness",
-                ],
-            )
-        else:
-            yield pd.DataFrame(
-                [],
-                columns=[
-                    "user_id",
-                    "n_gaps",
-                    "mean_gap_s",
-                    "sd_gap_s",
-                    "burstiness",
-                ],
-            )
-
-    return fold
+def _burstiness_step(st: tuple, ts) -> tuple:
+    # state = (n_gaps, Σgap, Σgap², last_at): O(1) exact integers per
+    # key — the stream never holds the gap history the batch window
+    # lags over. Σgap² rides a 64-bit long: gaps of a year (~3·10⁷ s)
+    # square to ~10¹⁵, so ~10⁴ such gaps fit — beyond that the batch
+    # twin's DECIMAL(38,0) path is the reprocessing route.
+    n, s, q, last_at = st
+    at = ts.value // 1_000_000_000  # unix seconds, floor — unix_timestamp(ts)
+    if last_at is not None:
+        gap = at - last_at
+        n, s, q = n + 1, s + gap, q + gap * gap
+    return n, s, q, at
 
 
-def burstiness_stream(
-    stream_df: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+def _burstiness_emit(key, st: tuple) -> tuple | None:
+    n, s, q, _ = st
+    if n < 2:
+        return None
+    # the batch entry's IEEE chain verbatim: μ = s/n,
+    # σ = √(double(n·q − s²))/n, B = (σ−μ)/(σ+μ), HALF_UP 6dp
+    nn = float(n)
+    mu = float(s) / nn
+    sigma = math.sqrt(float(n * q - s * s)) / nn
+    return (
+        key,
+        n,
+        _round6_half_up(mu),
+        _round6_half_up(sigma),
+        _round6_half_up((sigma - mu) / (sigma + mu)),
+    )
+
+
+def burstiness_stream(stream_df: DataFrame) -> DataFrame:
     """Streaming inter-arrival burstiness — the batch entry
     (plans/robust_queries.py::burstiness_user_interarrival) as
     O(1)-state ``applyInPandasWithState``: per user only
@@ -675,19 +618,11 @@ def burstiness_stream(
 
     Ordering contract: per-key event time non-decreasing across
     micro-batches (sorted within), as :func:`ewma_stream`."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_burstiness(),
-            outputStructType=BURSTINESS_SCHEMA,
-            stateStructType=_BURSTINESS_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    fold = _row_fold(
+        BURSTINESS_SCHEMA, "ts", (0, 0, 0, None), _burstiness_step, _burstiness_emit
+    )
+    return _fold_by_key(
+        stream_df, "user_id", fold, BURSTINESS_SCHEMA, _BURSTINESS_STATE_SCHEMA
     )
 
 
@@ -714,56 +649,26 @@ _OHLC_STATE_SCHEMA = StructType(
 )
 
 
-def _make_ohlc():
-    def fold(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # state = (n, open, high, low, close): O(1) exact integers per
-        # DAY — open is fixed by the first event ever seen for the day,
-        # close tracks the latest; the batch twin's within-day rank
-        # (grouped_row_index) is reproduced by the ordering contract
-        n, o, h, l, c = state.get if state.exists else (0, None, None, None, None)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for val in pdf["value"]:
-                # ADVICE r5: a SQL NULL value arrives as NaN (float64
-                # column) or None (object column) — it must not crash
-                # the Decimal quantize. Mirror the batch twin's SPARK
-                # semantics exactly (tests/test_stateful_ohlc.py):
-                # COUNT(*) counts the null row; min_by/max_by(cents,rn)
-                # return the cents AT the boundary row even when NULL;
-                # max/min skip nulls.
-                cents = None
-                if val is not None:
-                    fv = float(val)
-                    if not math.isnan(fv):
-                        cents = _cents_exact(fv)
-                if n == 0:
-                    o = cents
-                if cents is not None:
-                    h = cents if h is None else max(h, cents)
-                    l = cents if l is None else min(l, cents)
-                c = cents
-                n += 1
-        state.update((n, o, h, l, c))
-        yield pd.DataFrame(
-            [(key[0], n, o, h, l, c)],
-            columns=[
-                "day",
-                "n_events",
-                "open_cents",
-                "high_cents",
-                "low_cents",
-                "close_cents",
-            ],
-        )
-
-    return fold
+def _ohlc_step(st: tuple, val) -> tuple:
+    # state = (n, open, high, low, close): O(1) exact integers per
+    # DAY — open is fixed by the first event ever seen for the day,
+    # close tracks the latest; the batch twin's within-day rank
+    # (grouped_row_index) is reproduced by the ordering contract.
+    # A NULL value mirrors the batch twin's Spark semantics exactly
+    # (tests/test_stateful_ohlc.py): COUNT(*) counts the null row;
+    # min_by/max_by(cents, rn) return the cents AT the boundary row
+    # even when NULL; max/min skip nulls.
+    n, o, h, l, _ = st
+    cents = _cents_or_none(val)
+    if n == 0:
+        o = cents
+    if cents is not None:
+        h = cents if h is None else max(h, cents)
+        l = cents if l is None else min(l, cents)
+    return n + 1, o, h, l, cents
 
 
-def ohlc_stream(stream_df: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def ohlc_stream(stream_df: DataFrame) -> DataFrame:
     """Streaming daily OHLC bars — the batch entry
     (plans/timeseries_queries.py::ohlc_daily_bars) as O(1)-state
     ``applyInPandasWithState`` keyed by day: five integers of state,
@@ -776,20 +681,12 @@ def ohlc_stream(stream_df: DataFrame, watermark: str = "1 hour") -> DataFrame:
     Ordering contract: per-key (per-DAY) event time non-decreasing
     across micro-batches (sorted within), as :func:`ewma_stream` — the
     natural arrival order of a time-partitioned ingest."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .withColumn("day", F.to_date("ts"))
-        .groupBy("day")
-        .applyInPandasWithState(
-            _make_ohlc(),
-            outputStructType=OHLC_SCHEMA,
-            stateStructType=_OHLC_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    fold = _row_fold(
+        OHLC_SCHEMA, "value", (0, None, None, None, None), _ohlc_step,
+        lambda key, st: (key, *st),
+    )
+    return _fold_by_key(
+        stream_df, F.to_date("ts"), fold, OHLC_SCHEMA, _OHLC_STATE_SCHEMA
     )
 
 
@@ -869,17 +766,11 @@ def _welch_readout(etype, st):
         if den > 0:
             dof = se2 * se2 / den
 
-    def r6(x):
-        return None if x is None else _round6_half_up(x)
-
     return (
         etype,
         n0 if n0 > 0 else None,
         n1 if n1 > 0 else None,
-        r6(m0),
-        r6(m1),
-        r6(t),
-        r6(dof),
+        *(_round6_half_up(x) for x in (m0, m1, t, dof)),
     )
 
 
@@ -897,20 +788,20 @@ def _make_ab_stats():
                     continue
                 base = 4 * _arm_of(uid)
                 st[base] += 1  # COUNT(*) within (type, arm): nulls too
-                if val is not None and not math.isnan(float(val)):
-                    cents = _cents_exact(float(val))
+                cents = _cents_or_none(val)
+                if cents is not None:
                     st[base + 1] += 1
                     st[base + 2] += cents
                     st[base + 3] += cents * cents
         state.update(tuple(st))
         yield pd.DataFrame(
-            [_welch_readout(key[0], st)], columns=list(AB_STATS_SCHEMA.names)
+            [_welch_readout(key[0], st)], columns=AB_STATS_SCHEMA.names
         )
 
     return fold
 
 
-def ab_stats_stream(stream_df: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def ab_stats_stream(stream_df: DataFrame) -> DataFrame:
     """Streaming Welch A/B readout — the batch entry
     (plans/olap_queries.py::ab_welch_ttest) as O(1)-state
     ``applyInPandasWithState`` keyed by event_type: eight exact
@@ -932,19 +823,8 @@ def ab_stats_stream(stream_df: DataFrame, watermark: str = "1 hour") -> DataFram
     arms (9.2·10¹⁸ / 10⁹ rows); wider regimes move the two sum fields
     to split hi/lo words — the state schema seam is the only change.
     """
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _make_ab_stats(),
-            outputStructType=AB_STATS_SCHEMA,
-            stateStructType=_AB_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df, "event_type", _make_ab_stats(), AB_STATS_SCHEMA, _AB_STATE_SCHEMA
     )
 
 
@@ -991,9 +871,9 @@ def _make_cuped(d0: dt.date, d1: dt.date):
                 if uid is None or (isinstance(uid, float) and math.isnan(uid)):
                     continue  # batch: NULL user forms its own group; the
                     # synthetic corpus has none — documented divergence
-                if val is None or math.isnan(float(val)):
+                cents = _cents_or_none(val)
+                if cents is None:
                     continue  # NULL cents: sum skips
-                cents = _cents_exact(float(val))
                 day = ts.date() if hasattr(ts, "date") else ts
                 period = 1 if (day - d0).days * 2 >= span else 0
                 u = int(uid)
@@ -1023,7 +903,7 @@ def _make_cuped(d0: dt.date, d1: dt.date):
                     sum(y * y for y in post),
                 )
             ],
-            columns=list(CUPED_SHARD_SCHEMA.names),
+            columns=CUPED_SHARD_SCHEMA.names,
         )
 
     return fold
@@ -1034,7 +914,6 @@ def cuped_stream(
     d0: dt.date,
     d1: dt.date,
     n_shards: int = 32,
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Streaming CUPED sufficient statistics — the batch entry
     (plans/inference_queries.py::cuped_variance_reduction) carried as
@@ -1056,22 +935,12 @@ def cuped_stream(
     to ~10⁶-cent users on 10⁵-user shards; wider regimes split hi/lo
     words, the same seam as ``ab_stats_stream``.
     """
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .withColumn(
-            "__shard", F.pmod(F.col("user_id"), F.lit(n_shards)).cast("long")
-        )
-        .groupBy("__shard")
-        .applyInPandasWithState(
-            _make_cuped(d0, d1),
-            outputStructType=CUPED_SHARD_SCHEMA,
-            stateStructType=_CUPED_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df,
+        F.pmod(F.col("user_id"), F.lit(n_shards)).cast("long"),
+        _make_cuped(d0, d1),
+        CUPED_SHARD_SCHEMA,
+        _CUPED_STATE_SCHEMA,
     )
 
 
@@ -1121,10 +990,7 @@ def _make_bottomk(k: int):
                 h = int(
                     hashlib.md5(str(e).encode()).hexdigest()[:15], 16
                 )
-                v = None
-                if val is not None and not math.isnan(float(val)):
-                    v = float(val)
-                rows.append((h, e, v))
+                rows.append((h, e, _float_or_none(val)))
                 n_seen += 1
         rows.sort(key=lambda r: (r[0], r[1]))
         rows = rows[:k]
@@ -1144,15 +1010,13 @@ def _make_bottomk(k: int):
             med = _round6_half_up(mid)
         yield pd.DataFrame(
             [(key[0], n_seen, len(rows), med)],
-            columns=list(BOTTOMK_SCHEMA.names),
+            columns=BOTTOMK_SCHEMA.names,
         )
 
     return fold
 
 
-def bottomk_stream(
-    stream_df: DataFrame, k: int = 32, watermark: str = "1 hour"
-) -> DataFrame:
+def bottomk_stream(stream_df: DataFrame, k: int = 32) -> DataFrame:
     """Streaming bottom-k quantile sample — the batch entry
     (plans/battery_queries.py::sampled_quantile_portable) sample stage
     as ``applyInPandasWithState`` keyed by event_type: state is the k
@@ -1165,17 +1029,7 @@ def bottomk_stream(
     catalog entry hash-certifies the execution against the batch
     oracle). Median arithmetic mirrors both engines exactly: exact
     integer cents, (a+b)/2 for even counts, 6dp HALF-UP."""
-    from .windows import ensure_event_time
-
-    return (
-        ensure_event_time(stream_df, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _make_bottomk(int(k)),
-            outputStructType=BOTTOMK_SCHEMA,
-            stateStructType=_BOTTOMK_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_by_key(
+        stream_df, "event_type", _make_bottomk(int(k)), BOTTOMK_SCHEMA,
+        _BOTTOMK_STATE_SCHEMA,
     )

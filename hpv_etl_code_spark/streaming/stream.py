@@ -12,12 +12,14 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
 )
+
+from .stateful import _fold_by_key
 
 
 def read_events_stream(
@@ -76,13 +78,10 @@ def running_user_counts(stream_df: DataFrame) -> DataFrame:
     """Arbitrary stateful processing via applyInPandasWithState: emits an
     updated per-user running count each micro-batch. State is one long
     per user — the minimal template for custom streaming operators
-    (sessionization, CDC merge, feature windows...)."""
-    return stream_df.groupBy("user_id").applyInPandasWithState(
-        _count_events,
-        outputStructType=USER_COUNT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    (sessionization, CDC merge, feature windows...) — wired by the one
+    no-timeout driver of streaming/stateful.py."""
+    return _fold_by_key(
+        stream_df, "user_id", _count_events, USER_COUNT_SCHEMA, _STATE_SCHEMA
     )
 
 

@@ -23,7 +23,7 @@ def test_sessionizer_matches_batch_session_window(spark, ordered_stream_dir):
         .option("maxFilesPerTrigger", 1)  # several micro-batches
         .load(ordered_stream_dir)
     )
-    out = sessionize_stream(stream, gap_seconds=4 * 3600, watermark="1 hour")
+    out = sessionize_stream(stream, gap="4 hours", watermark="1 hour")
     run_to_memory_sink(out, "sessions_stateful", output_mode="append")
     got = {
         (r.user_id, str(r.session_start)): (r.n_events, round(r.sum_value, 4))
