@@ -6,25 +6,41 @@ The LLM-pipeline dedup family (north star, BASELINE.json). Scale design:
   shuffle on the md5 key, deterministic keeper (min id).
 - **MinHash+LSH** is the classic shingle → k-minhash signature → band →
   bucket-join pipeline: only documents sharing a band bucket are ever
-  compared, so cost is O(candidates), not O(n²). Signatures are computed
-  with native array expressions (``transform`` + ``xxhash64``) — no UDFs,
-  no MLlib vector materialization. Hot buckets (skewed bands) are the
-  known failure mode at 100 TB; ``max_bucket`` caps them (dropping
-  pathological buckets is standard practice — they're near-duplicates of
-  *everything*, e.g. boilerplate).
-- **SimHash** is a 64-bit weighted bit-vote fingerprint; near-dup pairs
-  come from 16-bit band buckets then a Hamming-distance filter
-  (``bit_count(a XOR b)``) — same bucket-join scaling story.
+  compared, so cost is O(candidates), not O(n²). Signatures are native
+  array expressions — no UDFs, no MLlib vector materialization. Two
+  hash families, one :class:`HashFamily` record each in
+  :data:`FAMILIES`:
 
-All hash functions are Spark-native (xxhash64); the LSH/SimHash entries
-are therefore rows-only in the driver gate (no DuckDB twin — hash
-algorithms differ), with invariant/recall tests in
-``tests/test_dedup.py``.
+  - ``"fast"`` — xxhash64 min-hashes over xxhash64-hashed (long) token
+    sets, ``F.hash`` band keys, and an estimated-Jaccard prefilter whose
+    value is emitted as ``est_jaccard``: the production path, rows-only
+    at the driver gate, outputs pinned by the repo benchmark;
+  - ``"portable"`` — md5-derived min-hashes over the STRING token set
+    and md5 band keys, which DuckDB reproduces bit-for-bit: the
+    oracle-certified path.
+
+  Every MinHash miner of both families runs ONE core (:func:`_lsh_pairs`
+  — banding, hot-bucket chunking, candidate self-join, pair dedup, exact
+  length-ratio prefilter, pinned-wide payload attach, exact Jaccard
+  refine): the flat :func:`minhash_lsh_pairs`, and over one
+  representative per distinct token set (:func:`tokset_groups`) the
+  group→member expansion :func:`minhash_lsh_pairs_grouped`, the doomed
+  set :func:`lsh_doomed_grouped` and the group-graph labeler
+  :func:`lsh_components_grouped`.
+- **SimHash** is a weighted bit-vote fingerprint (64-bit xxhash64, or
+  60-bit md5 for the portable twin); near-dup pairs come from four band
+  buckets then a Hamming-distance filter (``bit_count(a XOR b)``) —
+  same bucket-join scaling story.
+
+Portable entries hash-match DuckDB twins at the driver gate; the fast
+family carries invariant/recall tests (``tests/test_dedup.py``) and
+machinery-vs-portable pins (``tests/test_twin_certification.py``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -101,9 +117,9 @@ def _est_jaccard(sig_a: str, sig_b: str, num_hashes: int) -> Column:
     )
 
 
-# ----------------------------------------------------- MinHash + LSH
+# ------------------------------------------------ MinHash hash families
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
+def minhash_signature(shingles: Column | str, num_hashes: int = 16) -> Column:
     """k independent min-hashes via seeded xxhash64 over the shingle set —
     an array expression evaluated inside codegen, one pass per row.
     Works on any element type (xxhash64 is polymorphic); feed it hashed
@@ -125,83 +141,144 @@ def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
     return F.array(*sigs)
 
 
+def _portable_minhash_sig(toks_col: str | Column, num_hashes: int) -> Column:
+    """k md5-based min-hashes: h_seed(tok) = first 60 bits of
+    md5('{seed}|{tok}') — reproducible by any engine with md5."""
+
+    def _h(seed: int):
+        prefix = F.lit(f"{seed}|")
+        return lambda t: F.conv(
+            F.substring(F.md5(F.concat(prefix, t)), 1, 15), 16, 10
+        ).cast("bigint")
+
+    return F.array(
+        *[F.array_min(F.transform(toks_col, _h(s))) for s in range(num_hashes)]
+    )
+
+
+def _md5_band_key(band: int, rows_per_band: int) -> Column:
+    """md5 of the comma-joined band row of ``sig`` min-hashes — the
+    portable bucket key an independent engine computes identically."""
+    return F.md5(
+        F.concat_ws(
+            ",",
+            *[
+                F.element_at("sig", band * rows_per_band + i + 1).cast("string")
+                for i in range(rows_per_band)
+            ],
+        )
+    )
+
+
+@dataclass(frozen=True)
+class HashFamily:
+    """The four things the MinHash hash families differ in — everything
+    else (banding, candidates, refine, group expansion, labeling) is
+    shared:
+
+    - ``tokens``: string token set → the set the family signs;
+    - ``signature``: ``(toks, num_hashes)`` → k min-hashes;
+    - ``band_key``: ``(band, rows_per_band)`` → that band's bucket key
+      over the ``sig`` column;
+    - ``est_prefilter``: the refine runs behind the estimated-Jaccard
+      prefilter (``est ≥ t − 0.35``) and emits ``est_jaccard``.
+    """
+
+    tokens: Callable[[Column], Column]
+    signature: Callable[[str | Column, int], Column]
+    band_key: Callable[[int, int], Column]
+    est_prefilter: bool
+
+    @staticmethod
+    def named(name: str) -> HashFamily:
+        """The record of family ``name`` (ValueError if unknown)."""
+        if name not in FAMILIES:
+            raise ValueError(
+                f"hash_family must be one of {sorted(FAMILIES)}, got {name!r}"
+            )
+        return FAMILIES[name]
+
+    def signed(
+        self, df: DataFrame, ids: Column, toks: Column, num_hashes: int
+    ) -> DataFrame:
+        """``(id, toks, sig)`` over ``df``: this family's token set of
+        ``toks``, signed with ``num_hashes`` min-hashes."""
+        return df.select(ids.alias("id"), self.tokens(toks).alias("toks")).withColumn(
+            "sig", self.signature("toks", num_hashes)
+        )
+
+
+FAMILIES: dict[str, HashFamily] = {
+    # tokens hashed to longs up front: every downstream compare
+    # (minhash, band key, exact intersect) runs on fixed-width ints, not
+    # strings. Collision odds ~|doc|²/2⁶⁴ ≈ 0.
+    "fast": HashFamily(
+        tokens=lambda toks: F.array_distinct(
+            F.transform(toks, lambda t: F.xxhash64(t))
+        ),
+        signature=minhash_signature,
+        band_key=lambda b, r: F.hash(F.lit(b), F.slice("sig", b * r + 1, r)),
+        est_prefilter=True,
+    ),
+    # strings stay strings: the md5 chain must see what DuckDB sees; md5
+    # band keys because lsh_recall_eval reports the oracle's candidate
+    # recall; no est prefilter, so the oracles stay candidate-exact
+    "portable": HashFamily(
+        tokens=lambda toks: toks,
+        signature=_portable_minhash_sig,
+        band_key=_md5_band_key,
+        est_prefilter=False,
+    ),
+}
+
+
+def _band_rows(
+    df: DataFrame, key: str, fam: HashFamily, num_hashes: int, bands: int, *carry: str
+) -> DataFrame:
+    """One ``(key, *carry, band, bkey)`` row per band of each ``sig``."""
+    r = num_hashes // bands
+    structs = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), fam.band_key(b, r).alias("bkey"))
+            for b in range(bands)
+        ]
+    )
+    return df.select(key, *carry, F.explode(structs).alias("bs")).select(
+        key, *carry, "bs.band", "bs.bkey"
+    )
+
+
+# ----------------------------------------------------- MinHash + LSH
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.8,
+    threshold: float | None = 0.8,
     num_hashes: int = 16,
     bands: int = 4,
     max_bucket: int = 200,
-    hot_bucket_mode: str = "chunk",
+    hash_family: str = "fast",
+    tokens: Column | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b) with exact Jaccard ≥ threshold,
-    candidate-generated by LSH banding (b bands × r = k/b rows).
+    candidate-generated by LSH banding (b bands × r = k/b rows) — the
+    flat (per-document) miner of either hash family.
 
-    Hot buckets (> ``max_bucket`` members — boilerplate clusters) are the
-    straggler risk: one bucket's m²/2 pair generation lands on ONE task.
-    ``hot_bucket_mode``:
+    ``tokens`` overrides the shingling unit (default: distinct unigram
+    tokens of ``text_col``) — pass ``textops.shingles(text_col, w)`` for
+    Broder w-shingle near-dup; any array<string> expression works.
+    ``threshold=None`` stops before the refine and returns the
+    deduplicated candidate pairs ``(id_a, id_b)`` — what the banding
+    surfaces, for recall audits.
 
-    - ``"chunk"`` (default): split each hot bucket into
-      ceil(m/max_bucket) chunks by id-hash; the probe side replicates
-      per-bucket by that factor, so the pair work spreads across chunks²
-      tasks — complete output, bounded per-task cost (the manual analog
-      of AQE's skew-join splitting, applied to self-join pair explosion).
-    - ``"drop"``: discard hot buckets entirely (the classic
-      boilerplate-killer heuristic — members are near-dups of
-      *everything*, often noise at corpus scale).
-
-    Output: (id_a, id_b, est_jaccard, jaccard).
+    Output: (id_a, id_b, est_jaccard, jaccard) for the fast family,
+    (id_a, id_b, jaccard) for the portable one.
     """
-    # shingles are hashed to longs up front: every downstream compare
-    # (minhash, band key, exact intersect) runs on fixed-width ints, not
-    # strings — the hot loops stay cheap. Collision odds ~|doc|²/2⁶⁴ ≈ 0.
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(distinct_tokens(text_col), lambda t: F.xxhash64(t))
-        ).alias("toks"),
-    ).withColumn("sig", minhash_signature(F.col("toks"), num_hashes))
-    return minhash_lsh_pairs_from_base(
-        base,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        max_bucket=max_bucket,
-        hot_bucket_mode=hot_bucket_mode,
-    )
-
-
-def minhash_lsh_pairs_from_base(
-    base: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
-    max_bucket: int = 200,
-    hot_bucket_mode: str = "chunk",
-) -> DataFrame:
-    """:func:`minhash_lsh_pairs` over an ALREADY-SIGNED base frame
-    ``(id, toks, sig)`` — toks hashed to longs, sig a
-    :func:`minhash_signature` of matching ``num_hashes``.
-
-    This is the shared-computation seam: several pipeline entries need
-    LSH pairs over (a subset of) the same corpus, and the token/signature
-    stage is the expensive narrow prefix. Sign the corpus once (e.g.
-    :func:`build_corpus_index`, or a persisted/cached enriched frame),
-    then run banding + candidate join + Jaccard refine from the shared
-    base — at 100 TB the signed base is the parquet artifact every batch
-    job reads instead of re-hashing the corpus. See
-    :func:`minhash_lsh_pairs_grouped` for the identical-tokset-collapsed
-    variant (same output, m²-cheaper on boilerplate-heavy corpora).
-    """
-    return _lsh_pairs_uncollapsed(
-        base,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        max_bucket=max_bucket,
-        hot_bucket_mode=hot_bucket_mode,
-    )
+    fam = HashFamily.named(hash_family)
+    toks = distinct_tokens(text_col) if tokens is None else tokens
+    base = fam.signed(df, F.col(id_col), toks, num_hashes)
+    return _lsh_pairs(base, fam, threshold, num_hashes, bands, max_bucket)
 
 
 def _next_decade(n: int) -> int:
@@ -214,29 +291,23 @@ def _next_decade(n: int) -> int:
 
 
 def _length_ratio_prefilter(
-    cand: DataFrame,
-    payload: DataFrame,
-    key_col: str,
-    a_col: str,
-    b_col: str,
-    threshold: float,
+    cand: DataFrame, base: DataFrame, threshold: float
 ) -> DataFrame:
     """EXACT narrow prefilter on candidate pairs before token payloads
     attach: J ≥ t ⟹ |∩| ≥ t·|∪| ≥ t·max and |∩| ≤ min, so
     min ≥ t·max — a failing pair cannot pass the refine. The 1e-6
     margin keeps the filter sound against the refine's ROUND(J, 6)
     comparison (a pair at raw J ∈ [t − 5e-7, t) rounds UP into the
-    output on both engines, and its size ratio may sit just below t).
-    ``payload`` must carry (key_col, toks)."""
-    sizes = payload.select(key_col, F.size("toks").alias("__sz"))
+    output on both engines, and its size ratio may sit just below t)."""
+    sizes = base.select("id", F.size("toks").alias("__sz"))
     return (
-        cand.join(sizes.toDF(a_col, "__sza"), a_col)
-        .join(sizes.toDF(b_col, "__szb"), b_col)
+        cand.join(sizes.toDF("id_a", "__sza"), "id_a")
+        .join(sizes.toDF("id_b", "__szb"), "id_b")
         .filter(
             F.least("__sza", "__szb") * 1.0
             >= F.lit(max(threshold - 1e-6, 0.0)) * F.greatest("__sza", "__szb")
         )
-        .select(a_col, b_col)
+        .select("id_a", "id_b")
     )
 
 
@@ -281,6 +352,144 @@ def _pinned_wide(cand: DataFrame, key: str) -> DataFrame:
     return cand.repartition(shuffle_p * 8, key)
 
 
+def _lsh_pairs(
+    base: DataFrame,
+    fam: HashFamily,
+    threshold: float | None,
+    num_hashes: int,
+    bands: int,
+    max_bucket: int,
+    fan_partitions: int | None = None,
+) -> DataFrame:
+    """Banding + candidate self-join + exact Jaccard refine over
+    ``(id, toks, sig[, _w])`` — the one core behind every MinHash miner
+    of both families. ``_w`` (grouped miners: the group size) weights
+    the hot-bucket member counts so rep-level buckets are classified
+    exactly as the member-level buckets would be. ``threshold=None``
+    returns the deduplicated candidate pairs unrefined.
+
+    ``fan_partitions`` (optimization round 9, guide §2.5): repartition
+    the exploded band rows by id before the candidate self-join. Set
+    by plan-layer callers ONLY when the backing corpus is too small to
+    fill the session's cores (``plans/fanout.py::fan_partitions``) —
+    the bench corpus leaves the banding/candidate/pair-dedup pipeline
+    on ONE task (1-block checkpointed artifact + AQE small-shuffle
+    coalescing), and the inserted exchange doubles as the reuse point
+    that stops the explode lineage re-evaluating once per consumer
+    branch (bucket counts, normal, hot). At production scan sizes the
+    caller passes None and the plan is unchanged — re-evaluating a
+    cheap explode per branch beats shuffling the exploded corpus."""
+    # candidate generation is NARROW: only (id, band, bkey) flows through
+    # the self-join and pair-dedup shuffles; the (wide) token/signature
+    # arrays are re-attached afterwards by joining back to `base`.
+    w = F.col("_w") if "_w" in base.columns else F.lit(1)
+    exploded = _band_rows(
+        base.select("id", w.alias("_w"), "sig"), "id", fam, num_hashes, bands, "_w"
+    )
+    if fan_partitions:
+        exploded = exploded.repartition(fan_partitions, "id")
+
+    def pairs(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
+        return a.join(b, keys).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
+
+    # Hot buckets (> max_bucket members — boilerplate clusters) are the
+    # straggler risk: one bucket's m²/2 pair generation lands on ONE
+    # task. Each hot bucket splits into ceil(m/max_bucket) chunks by
+    # id-hash and the probe side replicates per chunk, so the pair work
+    # spreads across chunks² tasks — complete output, bounded per-task
+    # cost (the manual analog of AQE's skew-join splitting). Normal
+    # buckets take a lean direct self-join with no chunk machinery.
+    bucket_counts = exploded.groupBy("band", "bkey").agg(F.sum("_w").alias("bn"))
+    hot_keys = bucket_counts.filter(F.col("bn") > max_bucket)
+    normal = exploded.join(F.broadcast(hot_keys), ["band", "bkey"], "left_anti")
+    hot = exploded.join(F.broadcast(hot_keys), ["band", "bkey"]).withColumn(
+        "nchunks", F.ceil(F.col("bn") / max_bucket).cast("int")
+    )
+    h_a = hot.select(
+        F.col("id").alias("id_a"),
+        "band",
+        "bkey",
+        F.pmod(F.xxhash64("id"), F.col("nchunks")).cast("int").alias("chunk"),
+    )
+    h_b = hot.select(
+        F.col("id").alias("id_b"),
+        "band",
+        "bkey",
+        F.explode(F.sequence(F.lit(0), F.col("nchunks") - 1)).alias("chunk"),
+    )
+    cand = pairs(
+        normal.withColumnRenamed("id", "id_a"),
+        normal.withColumnRenamed("id", "id_b"),
+        ["band", "bkey"],
+    ).unionByName(pairs(h_a, h_b, ["band", "bkey", "chunk"]))
+
+    # Pair-dedup is a deliberate narrow shuffle. The alternative —
+    # emitting each pair only at its FIRST colliding band by carrying
+    # every band key through the join and filtering earlier-band
+    # matches — removes this exchange but measured 3.5× slower end-to-
+    # end at sf0.1 (18 s → 65 s): the candidate join must then sort and
+    # shuffle array-payload rows instead of (id, band, bkey) scalars,
+    # which dwarfs the saved exchange. Candidates stay narrow; dedup
+    # stays explicit.
+    cand = cand.dropDuplicates(["id_a", "id_b"])
+    if threshold is None:
+        return cand
+
+    # Memory control (round 8 — the sf10 rehearsal OOM'd the refine
+    # once signatures widened to 90 longs: each candidate row drags two
+    # sigs + two token arrays through a sort-merge join). Neither lever
+    # changes the qualifying pair set: the length-ratio prefilter is
+    # exact, and at the scaled regimes the payload attach is pinned wide
+    # (candidate rows are narrow pre-join, so AQE coalesces the
+    # exchange, but each output row is ~100× its input once payloads
+    # attach).
+    cand = _length_ratio_prefilter(cand, base, threshold)
+    if num_hashes > 32:
+        cand = _pinned_wide(cand, "id_a")
+
+    # The refine's Jaccard depends ONLY on set-intersection cardinality,
+    # so STRING token sets attach xxhash64-hashed (8 B per token; round
+    # 9 — the sf10 refine of the components twin dragged ~1.6 KB string
+    # arrays per side through a 32-task sort-merge join and OOM'd the
+    # 8 GiB heap): distinct strings hash to distinct longs up to the
+    # same ~2⁻⁶⁴ birthday odds already accepted for the gkey, so |∩|
+    # and the rounded jaccard are unchanged and the DuckDB twins (string
+    # list_intersect) still hash-match.
+    toks = F.col("toks")
+    if dict(base.dtypes)["toks"] == "array<string>":
+        toks = F.transform("toks", lambda t: F.xxhash64(t))
+    # The ≥10⁶-doc decade regimes are SHUFFLE-BOUND, not compute-bound
+    # (measured at sf10, 500 k docs, (90, 9)): with the sig payload +
+    # est prefilter the refine needs 16 g heap and runs 264 s; dropping
+    # the sig payload (est_jaccard emits NULL — exact jaccard decides
+    # anyway) fits 8 g and runs 124 s. At the 10⁵ decade ((63, 7), sf1)
+    # the trade flips — est's pruning outweighs its carry cost (20 s vs
+    # 50 s) — so the lean shape engages only past the 64-hash width.
+    est = fam.est_prefilter and num_hashes <= 64
+    pay = base.select("id", toks.alias("toks"), *(["sig"] if est else []))
+    joined = cand.join(pay.toDF(*[f"{c}_a" for c in pay.columns]), "id_a").join(
+        pay.toDF(*[f"{c}_b" for c in pay.columns]), "id_b"
+    )
+    if est:
+        # cheap signature-based prefilter (k long compares over the
+        # banded prefix) before the exact O(|toks|) intersect; the
+        # margin keeps sketch variance from dropping true positives —
+        # final correctness comes from the exact filter
+        joined = joined.withColumn(
+            "est_jaccard", F.round(_est_jaccard("sig_a", "sig_b", num_hashes), 6)
+        ).filter(F.col("est_jaccard") >= max(threshold - 0.35, 0.0))
+    elif fam.est_prefilter:
+        joined = joined.withColumn("est_jaccard", F.lit(None).cast("double"))
+    est_col = ["est_jaccard"] if fam.est_prefilter else []
+    return (
+        joined.withColumn("jaccard", F.round(jaccard(F.col("toks_a"), F.col("toks_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", *est_col, "jaccard")
+    )
+
+
+# ------------------------------------------- identical-tokset grouping
+
 def tokset_groups(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Collapse a signed base ``(id, toks, sig)`` to identical-tokset
     groups. Returns ``(members, groups)``: members maps each id to its
@@ -315,6 +524,29 @@ def tokset_groups(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     return members, groups
 
 
+def _group_pairs(
+    groups: DataFrame,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    max_bucket: int,
+    hash_family: str,
+    fan_partitions: int | None = None,
+) -> DataFrame:
+    """:func:`_lsh_pairs` over one representative per distinct tokset:
+    id = gkey, hot-bucket weight = group size. Rep pairs are refined
+    BEFORE any expansion — identical toksets imply identical
+    signatures, so group collision structure, est_jaccard and jaccard
+    are exactly the member-level values."""
+    reps = groups.select(
+        F.col("gkey").alias("id"), "toks", "sig", F.col("gn").alias("_w")
+    )
+    return _lsh_pairs(
+        reps, HashFamily.named(hash_family), threshold, num_hashes, bands,
+        max_bucket, fan_partitions,
+    )
+
+
 def minhash_lsh_pairs_grouped(
     members: DataFrame,
     groups: DataFrame,
@@ -323,45 +555,34 @@ def minhash_lsh_pairs_grouped(
     bands: int = 4,
     max_bucket: int = 200,
     fan_partitions: int | None = None,
+    hash_family: str = "fast",
 ) -> DataFrame:
     """MinHash+LSH pair mining over an identical-tokset-collapsed corpus
     (see :func:`tokset_groups`): mine pairs over ONE representative per
     distinct tokset, then expand group pairs back to member pairs.
+    ``groups`` must carry the ``hash_family`` token set and signature.
 
-    Output-equivalent to :func:`minhash_lsh_pairs_from_base` in
-    ``chunk`` mode (verified pair-for-pair in tests/test_dedup.py):
-    identical toksets imply identical signatures, so group collision
-    structure, est_jaccard and jaccard are all unchanged; within-group
+    Output-equivalent to :func:`minhash_lsh_pairs` (verified
+    pair-for-pair in tests/test_dedup.py, both families): within-group
     member pairs (jaccard exactly 1 ≥ any threshold, est 1) share every
-    band bucket by construction and are emitted directly. Hot-bucket
-    classification stays faithful by weighting rep bucket counts with
-    group size ``gn``.
+    band bucket by construction and are emitted directly. Empty-tokset
+    groups (whitespace-only docs) are excluded from them: the flat path
+    computes jaccard([],[]) = 0 (via greatest(union,1)) and drops such
+    pairs for any threshold in (0, 1].
 
     Why it matters at 100 TB: near-dup corpora are exactly the ones
     with heavy boilerplate repetition, and every m-member identical
     cluster shrinks the quadratic band-bucket/candidate/refine work by
-    m² while adding only two expansion joins over the members map.
-    (``drop`` mode is deliberately NOT offered here: it discards pairs
-    whose every shared bucket is hot, and an identical mega-cluster —
-    all band buckets shared, all hot — is precisely the boilerplate
-    ``drop`` intends to kill; collapsing would resurrect its
-    within-cluster pairs. Pair LISTING over such a cluster is also
-    inherently quadratic in the OUTPUT — for removal at scale use
-    :func:`lsh_dedup_keepers`-style survivor logic instead.)
+    m² while adding only two expansion joins over the members map (and
+    for the portable family the md5 chain — num_hashes md5 calls per
+    token — runs once per DISTINCT tokset). Pair LISTING over a huge
+    identical cluster is inherently quadratic in the OUTPUT — for
+    removal use :func:`lsh_doomed_grouped`.
     """
-    rep_base = groups.select(
-        F.col("gkey").alias("id"), "toks", "sig", F.col("gn").alias("_w")
+    rep_pairs = _group_pairs(
+        groups, threshold, num_hashes, bands, max_bucket, hash_family, fan_partitions
     )
-    rep_pairs = _lsh_pairs_uncollapsed(
-        rep_base,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        max_bucket=max_bucket,
-        hot_bucket_mode="chunk",
-        weight_col="_w",
-        fan_partitions=fan_partitions,
-    )
+    scores = rep_pairs.columns[2:]
     m_a = members.select(F.col("gkey").alias("id_a"), F.col("id").alias("ma"))
     m_b = members.select(F.col("gkey").alias("id_b"), F.col("id").alias("mb"))
     cross = (
@@ -370,41 +591,26 @@ def minhash_lsh_pairs_grouped(
         .select(
             F.least("ma", "mb").alias("id_a"),
             F.greatest("ma", "mb").alias("id_b"),
-            "est_jaccard",
-            "jaccard",
+            *scores,
         )
     )
-    # ADVICE r4: the within-group fast path asserts jaccard=1, but the
-    # flat path computes jaccard([],[]) = 0 (via greatest(union,1)) and
-    # drops empty-tokset pairs for any threshold > 0 — so empty-tokset
-    # groups (whitespace-only docs) are excluded here to keep the
-    # output-equivalence contract exact. (Assumes threshold in (0,1],
-    # the only meaningful range for near-dup mining.)
     nonempty = groups.filter(F.size("toks") > 0).select("gkey")
     within = (
         members.join(nonempty, "gkey", "left_semi")
         .select("gkey", F.col("id").alias("id_a"))
         .join(members.select("gkey", F.col("id").alias("id_b")), "gkey")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.lit(1.0).alias("est_jaccard"),
-            F.lit(1.0).alias("jaccard"),
-        )
+        .select("id_a", "id_b", *[F.lit(1.0).alias(c) for c in scores])
     )
     return cross.unionByName(within)
 
 
 def _doomed_from_rep_pairs(
-    members: DataFrame,
-    groups: DataFrame,
-    rep_pairs: DataFrame,
-    ga: str,
-    gb: str,
+    members: DataFrame, groups: DataFrame, rep_pairs: DataFrame
 ) -> DataFrame:
     """Non-survivors of greedy lowest-id-wins dedup, computed WITHOUT
-    expanding group pairs to member pairs (optimization round 9).
+    expanding group pairs ``(id_a, id_b)`` to member pairs (optimization
+    round 9).
 
     The survivor consumers (corpus pipeline, dedup front door) only
     need ``distinct id_b`` of the pair listing, but the grouped miners
@@ -456,21 +662,21 @@ def _doomed_from_rep_pairs(
     )
     partner_floors = (
         rep_pairs.join(
-            gmin.select(F.col("gkey").alias(ga), F.col("gmin").alias("_min_a")),
-            ga,
+            gmin.select(F.col("gkey").alias("id_a"), F.col("gmin").alias("_min_a")),
+            "id_a",
         )
         .join(
-            gmin.select(F.col("gkey").alias(gb), F.col("gmin").alias("_min_b")),
-            gb,
+            gmin.select(F.col("gkey").alias("id_b"), F.col("gmin").alias("_min_b")),
+            "id_b",
         )
         .select(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(ga).alias("gkey"), F.col("_min_b").alias("pmin")
+                        F.col("id_a").alias("gkey"), F.col("_min_b").alias("pmin")
                     ),
                     F.struct(
-                        F.col(gb).alias("gkey"), F.col("_min_a").alias("pmin")
+                        F.col("id_b").alias("gkey"), F.col("_min_a").alias("pmin")
                     ),
                 )
             ).alias("pm")
@@ -497,209 +703,62 @@ def lsh_doomed_grouped(
     bands: int = 4,
     max_bucket: int = 200,
     fan_partitions: int | None = None,
+    hash_family: str = "fast",
 ) -> DataFrame:
-    """Greedy lowest-id-wins doomed set for the FAST (xxhash64) grouped
-    family — ``minhash_lsh_pairs_grouped(...).select('id_b').distinct()``
-    without the member-pair expansion (see :func:`_doomed_from_rep_pairs`)."""
-    rep_base = groups.select(
-        F.col("gkey").alias("id"), "toks", "sig", F.col("gn").alias("_w")
+    """Greedy lowest-id-wins doomed set —
+    ``minhash_lsh_pairs_grouped(...).select('id_b').distinct()`` without
+    the member-pair expansion (see :func:`_doomed_from_rep_pairs`)."""
+    rep_pairs = _group_pairs(
+        groups, threshold, num_hashes, bands, max_bucket, hash_family, fan_partitions
     )
-    rep_pairs = _lsh_pairs_uncollapsed(
-        rep_base,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        max_bucket=max_bucket,
-        hot_bucket_mode="chunk",
-        weight_col="_w",
-        fan_partitions=fan_partitions,
-    )
-    return _doomed_from_rep_pairs(
-        members, groups, rep_pairs.select("id_a", "id_b"), "id_a", "id_b"
-    )
+    return _doomed_from_rep_pairs(members, groups, rep_pairs.select("id_a", "id_b"))
 
 
-def lsh_doomed_portable_grouped(
+def lsh_components_grouped(
     members: DataFrame,
     groups: DataFrame,
     threshold: float = 0.8,
     num_hashes: int = 16,
     bands: int = 4,
+    max_bucket: int = 200,
+    hash_family: str = "fast",
 ) -> DataFrame:
-    """Greedy lowest-id-wins doomed set for the PORTABLE (md5) grouped
-    family — the :func:`minhash_lsh_pairs_portable_grouped` pair listing
-    reduced to ``distinct id_b`` without expansion."""
-    rep_pairs = portable_rep_pairs(groups, threshold, num_hashes, bands)
-    return _doomed_from_rep_pairs(
-        members, groups, rep_pairs, "gkey_a", "gkey_b"
+    """Near-dup families as ``(id, component)``, component = the
+    family's minimum member id, for every member of a family: connected
+    components run over the GROUP graph (one node per distinct tokset,
+    refined rep pairs as edges) instead of the member pair list —
+    identical connectivity (identical-tokset groups are cliques;
+    contracting a clique preserves reachability), identical min-id
+    labels (min over member groups' min ids), edges smaller by the
+    product of group sizes. Families are the LSH-edge-connected groups
+    plus multi-member NON-EMPTY groups (within-group jaccard is exactly
+    1; empty toksets have jaccard([],[]) = 0 < threshold and stay
+    singletons), so the output equals components over the flat member
+    pair list (tests/test_dedup.py::
+    test_group_graph_components_equal_member_graph)."""
+    from .components import connected_components
+
+    rep_pairs = _group_pairs(
+        groups, threshold, num_hashes, bands, max_bucket, hash_family
     )
-
-
-def _lsh_pairs_uncollapsed(
-    base: DataFrame,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-    max_bucket: int,
-    hot_bucket_mode: str,
-    weight_col: str | None = None,
-    fan_partitions: int | None = None,
-) -> DataFrame:
-    """Banding + candidate self-join + Jaccard refine over ``(id, toks,
-    sig)``. ``weight_col`` (collapse path) weights the hot-bucket
-    member counts so rep-level buckets are classified exactly as the
-    uncollapsed member-level buckets would be.
-
-    ``fan_partitions`` (optimization round 9, guide §2.5): repartition
-    the exploded band rows by id before the candidate self-join. Set
-    by plan-layer callers ONLY when the backing corpus is too small to
-    fill the session's cores (``plans/fanout.py::fan_partitions``) —
-    the bench corpus leaves the banding/candidate/pair-dedup pipeline
-    on ONE task (1-block checkpointed artifact + AQE small-shuffle
-    coalescing), and the inserted exchange doubles as the reuse point
-    that stops the explode lineage re-evaluating once per consumer
-    branch (bucket counts, normal, hot). At production scan sizes the
-    caller passes None and the plan is unchanged — re-evaluating a
-    cheap explode per branch beats shuffling the exploded corpus."""
-    rows_per_band = num_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band)).alias(
-                    "bkey"
-                ),
-            )
-            for b in range(bands)
-        ]
+    comps_g = connected_components(rep_pairs, src="id_a", dst="id_b")
+    gstats = members.groupBy("gkey").agg(
+        F.min("id").alias("gmin"), F.count(F.lit(1)).alias("gn")
     )
-    # candidate generation is NARROW: only (id, band, bkey) flows through
-    # the self-join and pair-dedup shuffles; the (wide) token/signature
-    # arrays are re-attached afterwards by joining back to `base`.
-    w = F.col(weight_col) if weight_col else F.lit(1)
-    exploded = base.select(
-        "id", w.alias("_w"), F.explode(band_structs).alias("bs")
-    ).select("id", "_w", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey"))
-    if fan_partitions:
-        exploded = exploded.repartition(fan_partitions, "id")
-
-    bucket_counts = exploded.groupBy("band", "bkey").agg(F.sum("_w").alias("bn"))
-    hot_keys = bucket_counts.filter(F.col("bn") > max_bucket)
-    normal = exploded.join(F.broadcast(hot_keys), ["band", "bkey"], "left_anti")
-
-    def pair_up(side: DataFrame, keys: list[str]) -> DataFrame:
-        a = side.withColumnRenamed("id", "id_a")
-        b = side.withColumnRenamed("id", "id_b")
-        return a.join(b, keys).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-
-    # normal buckets: lean direct self-join, no chunk machinery at all
-    cand = pair_up(normal, ["band", "bkey"])
-
-    if hot_bucket_mode == "chunk":
-        # hot buckets: split each into ceil(m/max) chunks by id-hash; the
-        # probe side replicates per chunk so the m²/2 pair generation
-        # spreads over chunks tasks instead of one straggler
-        hot = exploded.join(F.broadcast(hot_keys), ["band", "bkey"]).withColumn(
-            "nchunks", F.ceil(F.col("bn") / max_bucket).cast("int")
+    glabel = (
+        gstats.join(groups.select("gkey", (F.size("toks") > 0).alias("ne")), "gkey")
+        .join(comps_g.withColumnRenamed("id", "gkey"), "gkey", "left")
+        .withColumn("gcomp", F.coalesce("component", "gkey"))
+        .filter(
+            F.col("component").isNotNull()
+            | ((F.col("gn") >= 2) & F.col("ne"))
         )
-        h_a = hot.select(
-            F.col("id").alias("id_a"),
-            "band",
-            "bkey",
-            F.pmod(F.xxhash64("id"), F.col("nchunks")).cast("int").alias("chunk"),
-        )
-        h_b = hot.select(
-            F.col("id").alias("id_b"),
-            "band",
-            "bkey",
-            F.explode(F.sequence(F.lit(0), F.col("nchunks") - 1)).alias("chunk"),
-        )
-        hot_cand = (
-            h_a.join(h_b, ["band", "bkey", "chunk"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        cand = cand.unionByName(hot_cand)
-    elif hot_bucket_mode != "drop":
-        raise ValueError(f"unknown hot_bucket_mode {hot_bucket_mode!r}")
-
-    # Pair-dedup is a deliberate narrow shuffle. The alternative —
-    # emitting each pair only at its FIRST colliding band by carrying
-    # every band key through the join and filtering earlier-band
-    # matches — removes this exchange but measured 3.5× slower end-to-
-    # end at sf0.1 (18 s → 65 s): the candidate join must then sort and
-    # shuffle array-payload rows instead of (id, band, bkey) scalars,
-    # which dwarfs the saved exchange. Candidates stay narrow; dedup
-    # stays explicit.
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-
-    if num_hashes > 32:
-        # Memory control for the SCALED banding regimes (round 8 — the
-        # sf10 rehearsal OOM'd the refine once signatures widened to 90
-        # longs: each candidate row drags two ~720 B sigs + two ~1.6 KB
-        # token arrays through a 32-partition sort-merge join). Two
-        # levers, neither changing the qualifying pair set:
-        # (a) an EXACT length-ratio prefilter on narrow (id, size) rows
-        #     — J ≥ t requires |∩| ≥ t·|∪| ≥ t·max, and |∩| ≤ min, so
-        #     min ≥ t·max; pairs failing it cannot pass the refine;
-        # (b) payload-attach partitioning PINNED wide (the AQE fan-out
-        #     blindspot: candidate rows are narrow pre-join, so AQE
-        #     coalesces the exchange, but each output row is ~100× its
-        #     input once payloads attach).
-        cand = _pinned_wide(
-            _length_ratio_prefilter(
-                cand, base, "id", "id_a", "id_b", threshold
-            ),
-            "id_a",
-        )
-
-    if num_hashes > 64:
-        # The ≥10⁶-doc decade regimes are SHUFFLE-BOUND, not
-        # compute-bound (measured at sf10, 500 k docs, (90, 9)): with
-        # the sig payload + est prefilter the refine needs 16 g heap
-        # and runs 264 s; dropping the sig payload (est_jaccard emits
-        # NULL — exact jaccard decides anyway) fits 8 g and runs 124 s.
-        # At the 10⁵ decade ((63, 7), sf1) the trade flips — est's
-        # pruning outweighs its carry cost (20 s vs 50 s) — so the lean
-        # shape engages only past the 64-hash width.
-        pay_a = base.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
-        pay_b = base.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
-        return (
-            cand.join(pay_a, "id_a")
-            .join(pay_b, "id_b")
-            .withColumn("est_jaccard", F.lit(None).cast("double"))
-            .withColumn(
-                "jaccard", F.round(jaccard(F.col("toks_a"), F.col("toks_b")), 6)
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "est_jaccard", "jaccard")
-        )
-
-    pay_a = base.select(
-        F.col("id").alias("id_a"), F.col("toks").alias("toks_a"), F.col("sig").alias("sig_a")
     )
-    pay_b = base.select(
-        F.col("id").alias("id_b"), F.col("toks").alias("toks_b"), F.col("sig").alias("sig_b")
-    )
-    joined = cand.join(pay_a, "id_a").join(pay_b, "id_b")
-
-    # compare the first num_hashes entries: the seeded hash family has
-    # the prefix property (seeds 0..k-1), so a persisted signature wider
-    # than this banding's num_hashes serves it exactly — est must
-    # compare the same prefix it divides by (shared array-compare
-    # helper, see _est_jaccard — the unrolled scalar chain is the
-    # pinned negative result its docstring rejects)
-    est = _est_jaccard("sig_a", "sig_b", num_hashes)
-    # cheap signature-based prefilter (16 long compares) before the exact
-    # O(|toks|) intersect; the margin keeps sketch variance from dropping
-    # true positives — final correctness comes from the exact filter.
-    est_floor = max(threshold - 0.35, 0.0)
+    comp_min = glabel.groupBy("gcomp").agg(F.min("gmin").alias("cluster"))
     return (
-        joined.withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= est_floor)
-        .withColumn("jaccard", F.round(jaccard(F.col("toks_a"), F.col("toks_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard", "jaccard")
+        members.join(glabel.select("gkey", "gcomp"), "gkey")
+        .join(comp_min, "gcomp")
+        .select("id", F.col("cluster").alias("component"))
     )
 
 
@@ -723,118 +782,7 @@ def lsh_dedup_keepers(
     return df.join(doomed, id_col, "left_anti")
 
 
-# ------------------------------------------------------------ SimHash
-
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document: explode term frequencies, vote each
-    bit ±weight, reassemble the sign vector into one long.
-
-    One shuffle (groupBy id) with 64 narrow integer aggregates — Spark's
-    partial aggregation keeps the exchange small.
-    """
-    tf = (
-        df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok"))
-        .groupBy("id", "tok")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("h", F.xxhash64("tok"))
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, F.col("w")).otherwise(
-                -F.col("w")
-            )
-        ).alias(f"v{i}")
-        for i in range(64)
-    ]
-    voted = tf.groupBy("id").agg(*votes)
-    # reassemble: bit 63 contributes Long.MIN_VALUE (2^63 overflows signed)
-    sim = F.lit(0).cast("long")
-    for i in range(63):
-        sim = sim + F.when(
-            F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-    sim = sim + F.when(
-        F.col("v63") > 0, F.lit(-(2**63)).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
-    return voted.select("id", sim.alias("simhash"))
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: 4×16-bit band buckets generate
-    candidates; exact Hamming distance (bit_count of XOR) filters.
-    With max_hamming ≤ 3, any matching pair shares at least one intact
-    16-bit band (pigeonhole) — banding loses nothing."""
-    sh = simhash64(df, id_col, text_col)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright("simhash", 16 * k).bitwiseAND(F.lit(0xFFFF)).alias("bkey"),
-            )
-            for k in range(4)
-        ]
-    )
-    exploded = sh.select("id", "simhash", F.explode(bands).alias("bs")).select(
-        "id", "simhash", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-    )
-    a = exploded.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "band", "bkey")
-    b = exploded.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "band", "bkey")
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-# ------------------------------------- portable (oracle-able) MinHash
-
-def _portable_minhash_sig(toks_col: str | Column, num_hashes: int) -> Column:
-    """k md5-based min-hashes: h_seed(tok) = first 60 bits of
-    md5('{seed}|{tok}') — reproducible by any engine with md5."""
-
-    def _h(seed: int):
-        prefix = F.lit(f"{seed}|")
-        return lambda t: F.conv(
-            F.substring(F.md5(F.concat(prefix, t)), 1, 15), 16, 10
-        ).cast("bigint")
-
-    return F.array(
-        *[F.array_min(F.transform(toks_col, _h(s))) for s in range(num_hashes)]
-    )
-
-
-def _portable_band_structs(bands: int, rows_per_band: int) -> Column:
-    """Band keys over a ``sig`` column: md5 of the comma-joined row of
-    min-hashes — portable across engines (vs the fast variant's F.hash)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at("sig", b * rows_per_band + i + 1).cast(
-                                "string"
-                            )
-                            for i in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(bands)
-        ]
-    )
-
+# ------------------------------------------------------- LSH sizing
 
 def lsh_params_for(
     n_docs: int,
@@ -905,167 +853,7 @@ def scaled_lsh_params(n_docs: int, threshold: float = 0.8) -> tuple[int, int]:
     return lsh_params_for(_next_decade(n_docs), threshold=threshold)
 
 
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
-    tokens: Column | None = None,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs with a PORTABLE hash family — md5-based
-    min-hashes (h_seed(tok) = first 60 bits of md5('{seed}|{tok}')) and
-    md5 band keys — so an independent engine computes bit-identical
-    signatures, buckets, candidates and output. This is the
-    differential-testing twin of :func:`minhash_lsh_pairs` (which keeps
-    xxhash64 for the cheap inner loop and the hot-bucket machinery);
-    banding parameters and the exact-Jaccard refine are the same.
-
-    ``tokens`` overrides the shingling unit (default: distinct unigram
-    tokens) — pass ``textops.shingles(text_col, w)`` for Broder
-    w-shingle near-dup (round 8), any array<string> expression works.
-
-    Output: (id_a, id_b, jaccard) for candidate pairs ≥ threshold.
-    """
-    r = num_hashes // bands
-    tok_expr = distinct_tokens(text_col) if tokens is None else tokens
-    base = df.select(
-        F.col(id_col).alias("id"), tok_expr.alias("toks")
-    ).withColumn("sig", _portable_minhash_sig("toks", num_hashes))
-
-    exploded = base.select(
-        "id", F.explode(_portable_band_structs(bands, r)).alias("bs")
-    ).select(
-        "id", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-    )
-    a = exploded.withColumnRenamed("id", "id_a")
-    b = exploded.withColumnRenamed("id", "id_b")
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    pay_a = base.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
-    pay_b = base.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
-    return (
-        cand.join(pay_a, "id_a")
-        .join(pay_b, "id_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("toks_a"), F.col("toks_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def portable_rep_pairs(
-    groups: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """GROUP-level near-dup pairs for the portable family: banding +
-    candidate join + rounded-Jaccard refine over one representative per
-    distinct tokset. Returns (gkey_a, gkey_b, jaccard) — the contracted
-    similarity graph that :func:`minhash_lsh_pairs_portable_grouped`
-    expands to member pairs, and that group-level consumers (connected
-    components over the GROUP graph — identical connectivity, edges
-    smaller by the product of group sizes) consume directly."""
-    r = num_hashes // bands
-    exploded = groups.select(
-        "gkey", F.explode(_portable_band_structs(bands, r)).alias("bs")
-    ).select("gkey", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey"))
-    a = exploded.withColumnRenamed("gkey", "gkey_a")
-    b = exploded.withColumnRenamed("gkey", "gkey_b")
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("gkey_a") < F.col("gkey_b"))
-        .select("gkey_a", "gkey_b")
-        .dropDuplicates(["gkey_a", "gkey_b"])
-    )
-    # EXACT length-ratio prefilter on narrow (gkey, size) rows before
-    # token payloads attach (round 8 — the sf10 refine OOM/spill
-    # class): dropped pairs cannot qualify, so output (and the DuckDB
-    # oracle) are unchanged. The payload join is then pinned wide at
-    # the scaled regimes: candidates are narrow pre-join, so AQE
-    # under-partitions the exchange while every output row carries two
-    # full STRING token arrays.
-    cand = _length_ratio_prefilter(
-        cand, groups, "gkey", "gkey_a", "gkey_b", threshold
-    )
-    if num_hashes > 32:  # scaled regimes only — gate scale keeps 32 tasks
-        cand = _pinned_wide(cand, "gkey_a")
-    # The refine's Jaccard depends ONLY on set-intersection cardinality,
-    # so the payload joins carry xxhash64-HASHED token arrays (8 B per
-    # token) instead of the raw strings (round 9 — the sf10 refine of
-    # the components twin dragged ~1.6 KB string arrays per side through
-    # a 32-task sort-merge join and OOM'd the 8 GiB heap): distinct
-    # strings hash to distinct longs up to the same ~2⁻⁶⁴ birthday odds
-    # already accepted for the gkey, so |∩| and the rounded jaccard are
-    # unchanged and the DuckDB twin (string list_intersect) still
-    # hash-matches. The md5 SIGNATURE chain stays on raw strings — that
-    # is the portable part an independent engine must reproduce.
-    htoks = F.transform("toks", lambda t: F.xxhash64(t))
-    pay_a = groups.select(F.col("gkey").alias("gkey_a"), htoks.alias("toks_a"))
-    pay_b = groups.select(F.col("gkey").alias("gkey_b"), htoks.alias("toks_b"))
-    return (
-        cand.join(pay_a, "gkey_a")
-        .join(pay_b, "gkey_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("toks_a"), F.col("toks_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("gkey_a", "gkey_b", "jaccard")
-    )
-
-
-def minhash_lsh_pairs_portable_grouped(
-    members: DataFrame,
-    groups: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """Identical-tokset-collapsed twin of
-    :func:`minhash_lsh_pairs_portable` (round 5 — the portable analog of
-    :func:`minhash_lsh_pairs_grouped`): banding, candidate join and the
-    exact-Jaccard refine run over ONE representative per distinct
-    tokset, then group pairs expand to member pairs. Pair-for-pair
-    output-equivalent (tests/test_dedup.py): identical toksets imply
-    identical md5 signatures, so candidate structure and the rounded
-    jaccard are unchanged; within-group pairs share every band bucket
-    and carry jaccard exactly 1.0 = round(jaccard(t,t), 6); empty
-    toksets are excluded from the within fast path (flat computes
-    jaccard([],[]) = 0 < threshold).
-
-    The big win over the fast family is bigger here: the md5 min-hash
-    chain (num_hashes md5 calls per token) is the dominant cost of the
-    portable path, and collapsing computes it once per DISTINCT tokset.
-    ``groups`` must carry (gkey, toks, sig) with the PORTABLE signature
-    (see plans/shared_cache.py::portable_grouped_corpus); persist it —
-    it feeds several plan branches.
-    """
-    rep_pairs = portable_rep_pairs(groups, threshold, num_hashes, bands)
-    m_a = members.select(F.col("gkey").alias("gkey_a"), F.col("id").alias("ma"))
-    m_b = members.select(F.col("gkey").alias("gkey_b"), F.col("id").alias("mb"))
-    cross = (
-        rep_pairs.join(m_a, "gkey_a")
-        .join(m_b, "gkey_b")
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    nonempty = groups.filter(F.size("toks") > 0).select("gkey")
-    within = (
-        members.join(nonempty, "gkey", "left_semi")
-        .select("gkey", F.col("id").alias("id_a"))
-        .join(members.select("gkey", F.col("id").alias("id_b")), "gkey")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
-
+# ------------------------------------------------ incremental dedup
 
 def build_corpus_index(
     df: DataFrame,
@@ -1086,17 +874,13 @@ def build_corpus_index(
     :func:`scaled_lsh_params` (corpus-magnitude banding, VERDICT r7 #1)
     — batches that dedup against the index must band with num_hashes ≤
     the index's signature width (prefix property)."""
-    base = df.select(
+    fam = HashFamily.named(hash_family)
+    return df.select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("text"),
         F.md5(F.col(text_col)).alias("fp"),
-        distinct_tokens(text_col).alias("toks"),
-    )
-    if hash_family == "fast":
-        return base.withColumn(
-            "toks", F.array_distinct(F.transform("toks", lambda t: F.xxhash64(t)))
-        ).withColumn("sig", minhash_signature(F.col("toks"), num_hashes))
-    return base.withColumn("sig", _portable_minhash_sig("toks", num_hashes))
+        fam.tokens(distinct_tokens(text_col)).alias("toks"),
+    ).withColumn("sig", fam.signature("toks", num_hashes))
 
 
 def dedup_incremental_survivors(
@@ -1107,9 +891,7 @@ def dedup_incremental_survivors(
     threshold: float = 0.8,
     num_hashes: int = 16,
     bands: int = 4,
-    broadcast_new: bool = True,
     hash_family: str = "portable",
-    max_corpus_bucket: int | None = None,
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Rows of ``new_df`` that survive dedup against an EXISTING corpus —
@@ -1121,34 +903,22 @@ def dedup_incremental_survivors(
 
     1. **Exact**: md5 content fingerprint, dropped if the corpus already
        contains it.
-    2. **Near**: portable MinHash band buckets (same md5 hash family as
-       :func:`minhash_lsh_pairs_portable`); batch docs sharing a band
-       bucket with a corpus doc are verified with exact Jaccard and
-       dropped at ≥ ``threshold``.
+    2. **Near**: MinHash band buckets of ``hash_family``; batch docs
+       sharing a band bucket with a corpus doc are verified with exact
+       Jaccard (behind the family's est prefilter, if any) and dropped
+       at ≥ ``threshold``.
 
     Scale: the per-batch cost is O(batch × collision rate), independent
-    of corpus size in compute (the corpus side streams through one
-    (band, bkey) join — at 100 TB the corpus's narrow
-    (id, band, bkey, toks) index would be precomputed once and reused
-    every batch, which is this plan minus the corpus signature stage).
-    With ``broadcast_new`` (default — ingest batches are small relative
-    to the corpus) every join broadcasts the batch side, so the corpus
-    is never shuffled at all: band match, fingerprint match, and the
+    of corpus size in compute. Ingest batches are small relative to the
+    corpus, so every join broadcasts the batch side and the corpus is
+    never shuffled at all: band match, fingerprint match, and the
     Jaccard refine are all map-side.
 
     ``hash_family``: "portable" (md5 — reproducible by the DuckDB
-    oracle; ~10× costlier hashing) or "fast" (xxhash64 signatures over
-    pre-hashed long tokens + ``F.hash`` band keys — the production
-    path; same banding structure, engine-specific buckets so rows-only
-    at the gate). Exact-duplicate drops are hash-family-independent
-    (md5 fingerprint either way); only near-dup candidate RECALL varies
-    with the family's bucketing.
-
-    ``max_corpus_bucket`` (None = exact): drop corpus band buckets with
-    more members than the cap before candidate generation — the
-    boilerplate guard for dense corpora, where one hot bucket otherwise
-    yields |bucket| candidates per colliding batch doc. Exact-duplicate
-    drops are unaffected (gate 1 is fingerprint-based).
+    oracle; ~10× costlier hashing) or "fast" (the production path;
+    engine-specific buckets, so rows-only at the gate). Exact-duplicate
+    drops are hash-family-independent (md5 fingerprint either way); only
+    near-dup candidate RECALL varies with the family's bucketing.
 
     ``corpus_index``: a prebuilt :func:`build_corpus_index` frame
     (possibly re-read from parquet) — the steady-state path that skips
@@ -1159,14 +929,12 @@ def dedup_incremental_survivors(
 
     Output: the surviving ``new_df`` rows (id, text).
     """
-    if hash_family not in ("portable", "fast"):
-        raise ValueError(f"hash_family must be 'portable'|'fast', got {hash_family!r}")
+    fam = HashFamily.named(hash_family)
     if (corpus_df is None) == (corpus_index is None):
         raise ValueError(
             "provide exactly one of corpus_df (raw corpus, signatures built "
             "per call) or corpus_index (prebuilt build_corpus_index frame)"
         )
-    r = num_hashes // bands
 
     def prep(df: DataFrame) -> DataFrame:
         return build_corpus_index(
@@ -1174,61 +942,32 @@ def dedup_incremental_survivors(
         )
 
     new_b = prep(new_df)
-    corpus_b = corpus_index if corpus_index is not None else prep(corpus_df)
-    if corpus_index is not None:
+    if corpus_index is None:
+        corpus_b = prep(corpus_df)
+    else:
         # ADVICE r8: a prebuilt index narrower than this banding would
         # silently truncate band keys — fail loudly instead
-        corpus_b = corpus_b.withColumn(
+        corpus_b = corpus_index.withColumn(
             "sig", _sig_width_guarded("sig", num_hashes)
         )
 
-    if hash_family == "fast":
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.hash(
-                        F.lit(b), F.slice("sig", b * r + 1, r)
-                    ).cast("string").alias("bkey"),
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        band_structs = _portable_band_structs(bands, r)
-
-    def bucketed(base: DataFrame) -> DataFrame:
-        return base.select(
-            "id", F.explode(band_structs).alias("bs")
-        ).select("id", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey"))
-
-    maybe_b = F.broadcast if broadcast_new else (lambda d: d)
-
     # gate 1 — exact fingerprint present in the corpus
     exact_dropped = (
-        corpus_b.select("fp").join(maybe_b(new_b.select("id", "fp")), "fp")
+        corpus_b.select("fp").join(F.broadcast(new_b.select("id", "fp")), "fp")
         .select("id")
     )
 
     # gate 2 — band-bucket candidates, exact-Jaccard verified
-    corpus_buckets = bucketed(corpus_b)
-    if max_corpus_bucket is not None:
-        # boilerplate guard: corpus buckets over the cap generate
-        # |bucket| candidates per colliding batch doc — drop them (their
-        # members are near-dups of *everything*; standard practice, same
-        # rationale as minhash_lsh_pairs' hot_bucket_mode="drop"). Hot
-        # keys are few: the anti-join side broadcasts.
-        hot = (
-            corpus_buckets.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("bn"))
-            .filter(F.col("bn") > max_corpus_bucket)
-            .select("band", "bkey")
-        )
-        corpus_buckets = corpus_buckets.join(F.broadcast(hot), ["band", "bkey"], "left_anti")
     cand = (
-        corpus_buckets
+        _band_rows(corpus_b, "id", fam, num_hashes, bands)
         .withColumnRenamed("id", "corpus_id")
-        .join(maybe_b(bucketed(new_b).withColumnRenamed("id", "new_id")), ["band", "bkey"])
+        .join(
+            F.broadcast(
+                _band_rows(new_b, "id", fam, num_hashes, bands)
+                .withColumnRenamed("id", "new_id")
+            ),
+            ["band", "bkey"],
+        )
         .select("new_id", "corpus_id")
         .dropDuplicates(["new_id", "corpus_id"])
     )
@@ -1240,7 +979,7 @@ def dedup_incremental_survivors(
         ),
         "corpus_id",
     ).join(
-        maybe_b(
+        F.broadcast(
             new_b.select(
                 F.col("id").alias("new_id"),
                 F.col("toks").alias("toks_n"),
@@ -1249,10 +988,7 @@ def dedup_incremental_survivors(
         ),
         "new_id",
     )
-    if hash_family == "fast":
-        # signature prefilter (k long compares) before the O(|toks|)
-        # exact intersect — same margin as minhash_lsh_pairs; the
-        # portable path skips it so the oracle stays candidate-exact
+    if fam.est_prefilter:
         est = _est_jaccard("sig_n", "sig_c", num_hashes)
         scored = scored.filter(est >= max(threshold - 0.35, 0.0))
     near_dropped = scored.filter(
@@ -1262,7 +998,7 @@ def dedup_incremental_survivors(
     # dropped ids are ⊆ batch ids — broadcast keeps the final anti-join
     # map-side too (otherwise a union forfeits the auto-broadcast)
     dropped = exact_dropped.unionByName(near_dropped).distinct()
-    return new_b.join(maybe_b(dropped), "id", "left_anti").select("id", "text")
+    return new_b.join(F.broadcast(dropped), "id", "left_anti").select("id", "text")
 
 
 def incremental_survivors_grouped(
@@ -1275,10 +1011,10 @@ def incremental_survivors_grouped(
     bands: int = 4,
 ) -> DataFrame:
     """Identical-tokset-collapsed twin of
-    :func:`dedup_incremental_survivors` (fast hash family, no bucket
-    cap): the near-dup doom decision depends only on a document's
-    DISTINCT TOKEN SET, so it is made once per batch tokset group
-    against once-per-corpus tokset group, then fanned back to members.
+    :func:`dedup_incremental_survivors` (fast hash family): the near-dup
+    doom decision depends only on a document's DISTINCT TOKEN SET, so it
+    is made once per batch tokset group against once-per-corpus tokset
+    group, then fanned back to members.
     Output-equivalent (verified in tests/test_dedup.py): a batch doc is
     doomed iff (a) its exact md5 fingerprint exists in the corpus —
     still per-document, fingerprints differ WITHIN a tokset group — or
@@ -1299,29 +1035,13 @@ def incremental_survivors_grouped(
     truncate band keys and degrade recall with no error; the constraint
     used to live only in ``build_corpus_index``'s docstring).
     """
-    r = num_hashes // bands
+    fam = FAMILIES["fast"]
     batch_groups = batch_groups.withColumn(
         "sig", _sig_width_guarded("sig", num_hashes)
     )
     corpus_groups = corpus_groups.withColumn(
         "sig", _sig_width_guarded("sig", num_hashes)
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(F.lit(b), F.slice("sig", b * r + 1, r))
-                .cast("string")
-                .alias("bkey"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-    def bucketed(groups: DataFrame) -> DataFrame:
-        return groups.select("gkey", F.explode(band_structs).alias("bs")).select(
-            "gkey", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-        )
 
     # gate 1 — exact fingerprint present in the corpus (per document)
     exact_dropped = corpus_fps.join(
@@ -1341,10 +1061,13 @@ def incremental_survivors_grouped(
 
     # gate 2b — cross-group band candidates, est-prefiltered, refined
     cand = (
-        bucketed(corpus_groups)
+        _band_rows(corpus_groups, "gkey", fam, num_hashes, bands)
         .withColumnRenamed("gkey", "gkey_c")
         .join(
-            F.broadcast(bucketed(batch_groups).withColumnRenamed("gkey", "gkey_n")),
+            F.broadcast(
+                _band_rows(batch_groups, "gkey", fam, num_hashes, bands)
+                .withColumnRenamed("gkey", "gkey_n")
+            ),
             ["band", "bkey"],
         )
         .filter(F.col("gkey_c") != F.col("gkey_n"))
@@ -1383,6 +1106,42 @@ def incremental_survivors_grouped(
     return new_docs.join(F.broadcast(dropped), "id", "left_anti").select("id", "text")
 
 
+# ------------------------------------------------------------ SimHash
+
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit SimHash per document: explode term frequencies, vote each
+    bit ±weight, reassemble the sign vector into one long.
+
+    One shuffle (groupBy id) with 64 narrow integer aggregates — Spark's
+    partial aggregation keeps the exchange small.
+    """
+    tf = (
+        df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok"))
+        .groupBy("id", "tok")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .withColumn("h", F.xxhash64("tok"))
+    )
+    votes = [
+        F.sum(
+            F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, F.col("w")).otherwise(
+                -F.col("w")
+            )
+        ).alias(f"v{i}")
+        for i in range(64)
+    ]
+    voted = tf.groupBy("id").agg(*votes)
+    # reassemble: bit 63 contributes Long.MIN_VALUE (2^63 overflows signed)
+    sim = F.lit(0).cast("long")
+    for i in range(63):
+        sim = sim + F.when(
+            F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
+        ).otherwise(F.lit(0).cast("long"))
+    sim = sim + F.when(
+        F.col("v63") > 0, F.lit(-(2**63)).cast("long")
+    ).otherwise(F.lit(0).cast("long"))
+    return voted.select("id", sim.alias("simhash"))
+
+
 def simhash_portable(text_col: str | Column) -> Column:
     """60-bit SimHash as a pure Column expression with a PORTABLE hash
     (first 60 bits of md5(token), unweighted distinct tokens) — an
@@ -1409,26 +1168,18 @@ def simhash_portable(text_col: str | Column) -> Column:
     return sh
 
 
-def simhash_near_pairs_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs with the portable 60-bit fingerprint:
-    4×15-bit band buckets generate candidates (pigeonhole-complete at
-    hamming ≤ 3), exact Hamming (bit_count of XOR) filters. The DuckDB
-    twin reproduces fingerprints, buckets and distances exactly."""
-    sh = df.select(
-        F.col(id_col).alias("id"), simhash_portable(text_col).alias("simhash")
-    )
+def _simhash_pairs(sh: DataFrame, band_bits: int, max_hamming: int) -> DataFrame:
+    """The banded-Hamming join over ``(id, simhash)``: 4 band buckets of
+    ``band_bits`` bits generate candidates; exact Hamming distance
+    (bit_count of XOR) filters. With max_hamming ≤ 3, any matching pair
+    shares at least one intact band (pigeonhole) — banding loses
+    nothing."""
+    mask = F.lit((1 << band_bits) - 1)
     bands = F.array(
         *[
             F.struct(
                 F.lit(k).alias("band"),
-                F.shiftright("simhash", 15 * k)
-                .bitwiseAND(F.lit(0x7FFF))
-                .alias("bkey"),
+                F.shiftright("simhash", band_bits * k).bitwiseAND(mask).alias("bkey"),
             )
             for k in range(4)
         ]
@@ -1436,12 +1187,8 @@ def simhash_near_pairs_portable(
     exploded = sh.select("id", "simhash", F.explode(bands).alias("bs")).select(
         "id", "simhash", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
     )
-    a = exploded.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "band", "bkey"
-    )
-    b = exploded.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "band", "bkey"
-    )
+    a = exploded.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "band", "bkey")
+    b = exploded.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "band", "bkey")
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         a.join(b, ["band", "bkey"])
@@ -1451,3 +1198,29 @@ def simhash_near_pairs_portable(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
+
+
+def simhash_near_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+) -> DataFrame:
+    """Near-dup pairs by 64-bit SimHash: 4×16-bit band buckets, exact
+    Hamming filter (:func:`_simhash_pairs`)."""
+    return _simhash_pairs(simhash64(df, id_col, text_col), 16, max_hamming)
+
+
+def simhash_near_pairs_portable(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+) -> DataFrame:
+    """SimHash near-dup pairs with the portable 60-bit fingerprint:
+    4×15-bit band buckets, exact Hamming filter. The DuckDB twin
+    reproduces fingerprints, buckets and distances exactly."""
+    sh = df.select(
+        F.col(id_col).alias("id"), simhash_portable(text_col).alias("simhash")
+    )
+    return _simhash_pairs(sh, 15, max_hamming)

@@ -124,84 +124,33 @@ def _text_records(
     n_rows: int,
     hash_family: str,
 ) -> DataFrame:
-    """Text near-dup decision records via the measured scale path:
-    xxhash64-hashed token/shingle sets → identical-tokset collapse →
-    corpus-magnitude-scaled banding over one representative per
-    distinct tokset → group-graph connected components (the
-    ``dedup_components_fast`` composition, generalized to any frame
-    and extended to label EVERY row, not only edge-touched ones).
-    ``hash_family='portable'`` swaps in the md5 family
-    (:func:`~.dedup.minhash_lsh_pairs_portable` + doc-level
-    components) — ~10× costlier hashing, but bit-reproducible by an
-    independent engine; it exists for the oracle-certified catalog
-    entry."""
-    from .components import connected_components
+    """Text near-dup decision records via the measured scale path, for
+    either hash family: the family's token/shingle sets → identical-
+    tokset collapse → corpus-magnitude-scaled banding over one
+    representative per distinct tokset → group-graph connected
+    components (the ``dedup_components_fast`` composition, generalized
+    to any frame and extended to label EVERY row, not only edge-touched
+    ones). ``hash_family='portable'`` (md5) costs ~10× the hashing but
+    is bit-reproducible by an independent engine; it backs the
+    oracle-certified catalog entry."""
     from .dedup import (
-        _lsh_pairs_uncollapsed,
-        minhash_lsh_pairs_portable,
-        minhash_signature,
+        HashFamily,
+        lsh_components_grouped,
         scaled_lsh_params,
         tokset_groups,
     )
 
+    fam = HashFamily.named(hash_family)
     nh, bands = scaled_lsh_params(n_rows, threshold)
     ids = df.select(F.col(id_col).cast("long").alias("id"))
-    if hash_family == "portable":
-        pairs = minhash_lsh_pairs_portable(
-            df, id_col, col, threshold=threshold,
-            num_hashes=nh, bands=bands, tokens=tok_expr,
-        )
-        comps = connected_components(pairs, src="id_a", dst="id_b")
-        return _records_from_components(ids, comps)
-    if hash_family != "fast":
-        raise ValueError(
-            f"hash_family must be 'fast'|'portable', got {hash_family!r}"
-        )
-
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.array_distinct(
-            F.transform(tok_expr, lambda t: F.xxhash64(t))
-        ).alias("toks"),
-    ).withColumn("sig", minhash_signature(F.col("toks"), nh))
-    members, groups = tokset_groups(base)
-    rep_base = groups.select(
-        F.col("gkey").alias("id"), "toks", "sig", F.col("gn").alias("_w")
+    members, groups = tokset_groups(
+        fam.signed(df, F.col(id_col).cast("long"), tok_expr, nh)
     )
-    rep_pairs = _lsh_pairs_uncollapsed(
-        rep_base,
-        threshold=threshold,
-        num_hashes=nh,
-        bands=bands,
-        max_bucket=100_000,
-        hot_bucket_mode="chunk",
-        weight_col="_w",
-    ).select(F.col("id_a").alias("gkey_a"), F.col("id_b").alias("gkey_b"))
-    comps_g = connected_components(rep_pairs, src="gkey_a", dst="gkey_b")
-    gstats = members.groupBy("gkey").agg(
-        F.min("id").alias("gmin"), F.count(F.lit(1)).alias("gn")
+    fam_labels = lsh_components_grouped(
+        members, groups, threshold=threshold, num_hashes=nh, bands=bands,
+        max_bucket=100_000, hash_family=hash_family,
     )
-    nonempty = groups.select("gkey", (F.size("toks") > 0).alias("ne"))
-    # family gkeys: LSH-edge-connected, or multi-member identical
-    # NON-EMPTY toksets (within-group jaccard is exactly 1; empty
-    # toksets have jaccard([],[]) = 0 < threshold and stay singletons —
-    # the documented flat-path contract)
-    glabel = (
-        gstats.join(nonempty, "gkey")
-        .join(comps_g, gstats.gkey == comps_g.id, "left")
-        .withColumn("gcomp", F.coalesce("component", "gkey"))
-        .filter(
-            F.col("component").isNotNull()
-            | ((F.col("gn") >= 2) & F.col("ne"))
-        )
-    )
-    comp_min = glabel.groupBy("gcomp").agg(F.min("gmin").alias("cluster"))
-    fam = (
-        members.join(glabel.select("gkey", "gcomp"), "gkey")
-        .join(comp_min, "gcomp")
-        .select("id", F.col("cluster").alias("component"))
-    )
-    return _records_from_components(ids, fam)
+    return _records_from_components(ids, fam_labels)
 
 
 def _semantic_records(
@@ -283,10 +232,10 @@ def dedup(
       decade-stepped seams every certified default path uses). Pass
       ``n_rows`` to skip the count job when the caller already knows it
       (at 100 TB: parquet footer metadata).
-    - ``hash_family``: ``'fast'`` (xxhash64 + identical-tokset collapse
-      + group-graph components — the production path) or
+    - ``hash_family``: ``'fast'`` (xxhash64 — the production path) or
       ``'portable'`` (md5 — reproducible by an independent engine; the
-      oracle-certification path).
+      oracle-certification path); both run the identical-tokset
+      collapse and group-graph components.
     - Returns ``(id, cluster, is_keeper)`` — one row per input row;
       ``cluster`` is the duplicate family's minimum id, ``is_keeper``
       marks exactly the minimum of each family. ``threshold`` is

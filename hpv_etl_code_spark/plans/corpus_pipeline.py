@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from ..operators import textops
 from ..operators.dedup import (
     exact_dedup_keepers,
-    minhash_lsh_pairs_portable,
+    lsh_doomed_grouped,
+    minhash_lsh_pairs,
 )
 from ..sources.registry import load_table
 
@@ -38,7 +39,6 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus re-tokenization, and no stage moves signature bytes it
     doesn't band with.
     """
-    from ..operators.dedup import lsh_doomed_grouped
     from .shared_cache import (
         corpus_lsh_params,
         pipeline_exact_deduped,
@@ -97,18 +97,17 @@ def _corpus_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def llm_corpus_pipeline_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME composed pipeline, ORACLE-CHECKED end-to-end: the
-    near-dup stage uses the portable md5 MinHash (operators/dedup.py::
-    minhash_lsh_pairs_portable), so DuckDB reproduces every stage —
+    near-dup stage uses the portable md5 MinHash family
+    (operators/dedup.py::FAMILIES), so DuckDB reproduces every stage —
     quality gate, language gate, exact dedup, LSH candidates, greedy
     lowest-id-wins survivor set — bit-for-bit.
 
     Round 5: the LSH stage rides the portable identical-tokset collapse
     (plans/shared_cache.py::pipeline_portable_grouped +
-    operators/dedup.py::minhash_lsh_pairs_portable_grouped) — one md5
+    operators/dedup.py::lsh_doomed_grouped) — one md5
     signature chain per distinct surviving tokset; pair output is
     test-locked identical to the flat miner, so the end-to-end oracle
     is unchanged."""
-    from ..operators.dedup import lsh_doomed_portable_grouped
     from .shared_cache import pipeline_exact_deduped, pipeline_portable_grouped
 
     ed = pipeline_exact_deduped(spark, sf_dir)
@@ -116,8 +115,8 @@ def llm_corpus_pipeline_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 9: doomed ids via the group-minimum rule instead of the
     # quadratic member-pair expansion — output-equal (the end-to-end
     # oracle hash is unchanged; see _doomed_from_rep_pairs)
-    doomed = lsh_doomed_portable_grouped(
-        members, pgroups, threshold=0.9
+    doomed = lsh_doomed_grouped(
+        members, pgroups, threshold=0.9, hash_family="portable"
     ).select(F.col("id").alias("doc_id"))
     return ed.join(doomed, "doc_id", "left_anti").select(
         "doc_id", "lang", "source", "quality", "n_tokens", "fingerprint"
@@ -203,7 +202,9 @@ def llm_corpus_pipeline_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dsir, spandedup
 
     g = _corpus_stages(spark, sf_dir)
-    pairs = minhash_lsh_pairs_portable(g, "doc_id", "text", threshold=0.9)
+    pairs = minhash_lsh_pairs(
+        g, "doc_id", "text", threshold=0.9, hash_family="portable"
+    )
     doomed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     surv = g.join(doomed, "doc_id", "left_anti")
 

@@ -14,7 +14,7 @@ training-data-pipeline use case (feature trends, corpus balance).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.registry import load_table
@@ -256,7 +256,13 @@ def cusum_user_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cusum_segments(ev: DataFrame, chunk: int = _CUSUM_CHUNK) -> DataFrame:
     """The segmented fold over a (user_id, ts, event_id, cents) frame —
     output is EXACTLY chunk-size-invariant (integer max/plus is
-    associative; property-tested at widths 1/7/32/10⁹)."""
+    associative; property-tested at widths 1/7/32/10⁹).
+
+    A NULL value is counted and leaves the CUSUM unchanged, as the
+    oracle's NULL-skipping running SUM does: its unit is the
+    composition's identity (t = 0; m, mt, mm NULL — ``greatest`` skips
+    NULLs), so a user whose values are all NULL ends with NULL
+    statistics."""
     k1 = ev.agg(
         F.expr("CAST(sum(cents) DIV count(*) AS BIGINT)").alias("__k")
     )
@@ -269,15 +275,15 @@ def cusum_segments(ev: DataFrame, chunk: int = _CUSUM_CHUNK) -> DataFrame:
     zs = F.transform(
         F.array_sort(F.collect_list(F.struct("rn", "z"))), lambda s: s["z"]
     )
-    units = F.transform(
-        zs,
-        lambda z: F.struct(
-            z.alias("t"),
-            F.greatest(F.lit(0).cast("long"), z).alias("m"),
-            z.alias("mt"),
-            F.greatest(F.lit(0).cast("long"), z).alias("mm"),
-        ),
-    )
+    zero = F.lit(0).cast("long")
+
+    def unit(z: Column) -> Column:
+        pos = F.when(z.isNotNull(), F.greatest(zero, z))
+        return F.struct(
+            F.coalesce(z, zero).alias("t"), pos.alias("m"), z.alias("mt"), pos.alias("mm")
+        )
+
+    units = F.transform(zs, unit)
     chunk_summary = F.aggregate(
         F.slice(units, 2, F.size(units) - 1),
         F.element_at(units, 1),

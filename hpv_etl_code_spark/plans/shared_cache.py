@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from ..operators import textops
 from . import artifacts
 from .artifacts import stage_artifact_from
-from ..operators.dedup import minhash_signature, scaled_lsh_params
+from ..operators.dedup import FAMILIES, minhash_signature, scaled_lsh_params
 from ..operators.textops import distinct_tokens
 from ..sources.registry import load_table
 
@@ -63,9 +63,7 @@ _COUNTS: dict[tuple[str, str], int] = {}
 def _hashed_toks(text_col: str = "text") -> Column:
     """xxhash64-hashed distinct token set (the fast family's shingling
     unit) — fixed-width longs so every downstream compare is cheap."""
-    return F.array_distinct(
-        F.transform(distinct_tokens(text_col), lambda t: F.xxhash64(t))
-    )
+    return FAMILIES["fast"].tokens(distinct_tokens(text_col))
 
 
 def _gkey(toks: Column) -> Column:
@@ -191,8 +189,6 @@ def _portable_groups_from_docs(d: DataFrame, num_hashes: int) -> DataFrame:
     ``gn`` counts the documents of ``d`` in each group. The md5 chain
     (num_hashes md5 calls per token — the portable family's dominant
     cost) runs once per DISTINCT tokset."""
-    from ..operators.dedup import _portable_minhash_sig
-
     keyed = d.select(
         _gkey(_hashed_toks("text")).alias("gkey"),
         distinct_tokens("text").alias("stoks"),
@@ -203,7 +199,7 @@ def _portable_groups_from_docs(d: DataFrame, num_hashes: int) -> DataFrame:
             F.count(F.lit(1)).alias("gn"),
             F.first("stoks").alias("toks"),
         )
-        .withColumn("sig", _portable_minhash_sig("toks", num_hashes))
+        .withColumn("sig", FAMILIES["portable"].signature("toks", num_hashes))
     )
 
 

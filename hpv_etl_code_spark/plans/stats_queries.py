@@ -434,12 +434,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sample. Both pair sets are output-bounded; the final
     metric agg is one full-outer join of pair keys + one row.
     """
-    from ..operators.dedup import (
-        _portable_band_structs,
-        _portable_minhash_sig,
-        distinct_tokens,
-        jaccard,
-    )
+    from ..operators.dedup import distinct_tokens, jaccard, minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % _EVAL_SAMPLE_MOD == 0
@@ -481,20 +476,12 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # production banding chain over the same sample (empty token sets
-    # carry no hashes — dropped, mirroring the oracle's natural drop)
-    sig = (
-        base.filter(F.size("toks") > 0)
-        .withColumn("sig", _portable_minhash_sig("toks", 16))
-        .select("id", F.explode(_portable_band_structs(4, 4)).alias("bs"))
-        .select("id", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey"))
-    )
-    cand = (
-        sig.withColumnRenamed("id", "id_a")
-        .join(sig.withColumnRenamed("id", "id_b"), ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    # production banding chain over the same sample, stopped at the
+    # deduplicated candidates (empty token sets carry no hashes —
+    # dropped, mirroring the oracle's natural drop)
+    cand = minhash_lsh_pairs(
+        base.filter(F.size("toks") > 0), "id", "toks", threshold=None,
+        hash_family="portable", tokens=F.col("toks"),
     )
 
     joined = truth.withColumn("in_t", F.lit(1)).join(

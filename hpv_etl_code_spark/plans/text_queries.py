@@ -5,8 +5,9 @@ winnowing fingerprints, exact dedup, n-gram Jaccard directly; MinHash
 and SimHash through their PORTABLE md5-hash twins
 (``dedup_minhash_portable`` / ``dedup_simhash_portable`` — bit-identical
 in DuckDB). The xxhash64 variants remain the production scale path
-(cheaper inner loop, hot-bucket splitting) with invariant/recall pytest
-coverage (tests/test_dedup.py) and rows-only driver checks.
+(cheaper inner loop; same banding core — operators/dedup.py) with
+invariant/recall pytest coverage (tests/test_dedup.py) and rows-only
+driver checks.
 """
 
 from __future__ import annotations
@@ -20,9 +21,9 @@ from ..operators.dedup import (
     dedup_incremental_survivors,
     exact_dedup_keepers,
     jaccard,
+    lsh_components_grouped,
     minhash_lsh_pairs,
     minhash_lsh_pairs_grouped,
-    minhash_lsh_pairs_portable,
     scaled_lsh_params,
     simhash_near_pairs,
     simhash_near_pairs_portable,
@@ -334,20 +335,20 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ORACLE-CHECKED MinHash+LSH pipeline: md5-based portable hash
     family — DuckDB computes bit-identical signatures, band buckets,
     candidates and the exact-Jaccard refine (operators/dedup.py::
-    minhash_lsh_pairs_portable). The xxhash64 sibling keeps the cheap
-    inner loop + hot-bucket splitting and stays rows-only.
+    minhash_lsh_pairs, ``hash_family="portable"``). The xxhash64
+    sibling keeps the cheap inner loop and stays rows-only.
 
     Round 5: runs through the identical-tokset collapse
-    (minhash_lsh_pairs_portable_grouped over the persisted portable
-    group frame) — the md5 min-hash chain, the dominant cost here, is
-    computed once per DISTINCT tokset; output is pair-for-pair
-    identical to the flat path (test-locked) so the oracle is
-    unchanged."""
-    from ..operators.dedup import minhash_lsh_pairs_portable_grouped
+    (minhash_lsh_pairs_grouped over the persisted portable group frame)
+    — the md5 min-hash chain, the dominant cost here, is computed once
+    per DISTINCT tokset; output is pair-for-pair identical to the flat
+    path (test-locked) so the oracle is unchanged."""
     from .shared_cache import portable_grouped_corpus
 
     members, pgroups = portable_grouped_corpus(spark, sf_dir)
-    return minhash_lsh_pairs_portable_grouped(members, pgroups, threshold=0.8)
+    return minhash_lsh_pairs_grouped(
+        members, pgroups, threshold=0.8, hash_family="portable"
+    )
 
 
 def dedup_minhash_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,11 +366,10 @@ def dedup_minhash_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates ever reach the refine — and the DuckDB twin unrolls the
     same 32-hash banding, so the whole regime is hash-certified, not
     just argued."""
-    from ..operators.dedup import minhash_lsh_pairs_portable
-
     d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, num_hashes=32, bands=4
+    return minhash_lsh_pairs(
+        d, "doc_id", "text", threshold=0.8, num_hashes=32, bands=4,
+        hash_family="portable",
     )
 
 
@@ -556,44 +556,18 @@ def dedup_components_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     same sf0.01-decade parameters (asserted equal at gate scale in
     tests/test_catalog_oracle.py); ``dedup_minhash_portable`` remains
     the (16, 4) certification pin."""
-    from ..operators.components import connected_components
-    from ..operators.dedup import portable_rep_pairs
     from .shared_cache import corpus_lsh_params, scaled_portable_grouped_corpus
 
     # Round 5: components run over the GROUP graph (one node per
     # distinct tokset, rep-level pair edges) instead of the 2.8M-row
-    # member pair list — identical connectivity (identical-tokset
-    # groups are cliques; contracting a clique preserves reachability)
-    # and identical min-doc labels (min over member groups' min ids).
-    # Empty-tokset groups and pairless singleton groups are excluded,
-    # matching the flat pair list (no pairs → not in the output).
+    # member pair list — same families and labels
+    # (operators/dedup.py::lsh_components_grouped).
     members, pgroups = scaled_portable_grouped_corpus(spark, sf_dir)
     nh, bands = corpus_lsh_params(spark, sf_dir)
-    rep_pairs = portable_rep_pairs(
-        pgroups, threshold=0.8, num_hashes=nh, bands=bands
-    )
-    comps_g = connected_components(rep_pairs, src="gkey_a", dst="gkey_b")
-    gstats = members.groupBy("gkey").agg(
-        F.min("id").alias("gmin"), F.count(F.lit(1)).alias("gn")
-    )
-    nonempty = pgroups.select("gkey", (F.size("toks") > 0).alias("ne"))
-    glabel = (
-        gstats.join(nonempty, "gkey")
-        .join(comps_g, gstats.gkey == comps_g.id, "left")
-        .withColumn("gcomp", F.coalesce("component", "gkey"))
-        .filter(
-            F.col("component").isNotNull()
-            | ((F.col("gn") >= 2) & F.col("ne"))
-        )
-    )
-    comp_min = glabel.groupBy("gcomp").agg(F.min("gmin").alias("comp_doc"))
-    return (
-        members.join(glabel.select("gkey", "gcomp"), "gkey")
-        .join(comp_min, "gcomp")
-        .select(
-            F.col("id").alias("doc_id"), F.col("comp_doc").alias("component")
-        )
-    )
+    return lsh_components_grouped(
+        members, pgroups, threshold=0.8, num_hashes=nh, bands=bands,
+        hash_family="portable",
+    ).select(F.col("id").alias("doc_id"), "component")
 
 
 # The recursive closure reaches every (node, min-reachable-id) pair; the
@@ -644,8 +618,9 @@ def dedup_minhash_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textops import shingles
 
     d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, tokens=shingles("text", 3)
+    return minhash_lsh_pairs(
+        d, "doc_id", "text", threshold=0.8, hash_family="portable",
+        tokens=shingles("text", 3),
     )
 
 
@@ -668,20 +643,15 @@ def dedup_shingles_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_minhash_shingles`` (portable md5, (16, 4)) is the oracle
     pin and tests/test_twin_certification.py pins this machinery
     against it."""
-    from ..operators.dedup import minhash_lsh_pairs_grouped, tokset_groups
-    from ..operators.dedup import minhash_signature
+    from ..operators.dedup import FAMILIES, tokset_groups
     from ..operators.textops import shingles
     from .shared_cache import corpus_lsh_params
 
     d = load_table(spark, sf_dir, "documents")
     nh, bands = corpus_lsh_params(spark, sf_dir)
-    base = d.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(
-            F.transform(shingles("text", 3), lambda t: F.xxhash64(t))
-        ).alias("toks"),
-    ).withColumn("sig", minhash_signature(F.col("toks"), nh))
-    members, groups = tokset_groups(base)
+    members, groups = tokset_groups(
+        FAMILIES["fast"].signed(d, F.col("doc_id"), shingles("text", 3), nh)
+    )
     return minhash_lsh_pairs_grouped(
         members,
         groups,
@@ -710,13 +680,14 @@ def dedup_shingles_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     nh, bands = corpus_lsh_params(spark, sf_dir)
-    return minhash_lsh_pairs_portable(
+    return minhash_lsh_pairs(
         d,
         "doc_id",
         "text",
         threshold=0.8,
         num_hashes=nh,
         bands=bands,
+        hash_family="portable",
         tokens=shingles("text", 3),
     )
 
@@ -786,46 +757,14 @@ def dedup_components_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter, label propagation over the contracted group graph
     (edges smaller than member pairs by the product of group sizes).
     """
-    from ..operators.components import connected_components
-    from ..operators.dedup import _lsh_pairs_uncollapsed
     from .shared_cache import corpus_lsh_params, grouped_corpus
 
     members, groups = grouped_corpus(spark, sf_dir)
     nh, bands = corpus_lsh_params(spark, sf_dir)
-    rep_base = groups.select(
-        F.col("gkey").alias("id"), "toks", "sig", F.col("gn").alias("_w")
-    )
-    rep_pairs = _lsh_pairs_uncollapsed(
-        rep_base,
-        threshold=0.8,
-        num_hashes=nh,
-        bands=bands,
+    return lsh_components_grouped(
+        members, groups, threshold=0.8, num_hashes=nh, bands=bands,
         max_bucket=100_000,
-        hot_bucket_mode="chunk",
-        weight_col="_w",
-    ).select(F.col("id_a").alias("gkey_a"), F.col("id_b").alias("gkey_b"))
-    comps_g = connected_components(rep_pairs, src="gkey_a", dst="gkey_b")
-    gstats = members.groupBy("gkey").agg(
-        F.min("id").alias("gmin"), F.count(F.lit(1)).alias("gn")
-    )
-    nonempty = groups.select("gkey", (F.size("toks") > 0).alias("ne"))
-    glabel = (
-        gstats.join(nonempty, "gkey")
-        .join(comps_g, gstats.gkey == comps_g.id, "left")
-        .withColumn("gcomp", F.coalesce("component", "gkey"))
-        .filter(
-            F.col("component").isNotNull()
-            | ((F.col("gn") >= 2) & F.col("ne"))
-        )
-    )
-    comp_min = glabel.groupBy("gcomp").agg(F.min("gmin").alias("comp_doc"))
-    return (
-        members.join(glabel.select("gkey", "gcomp"), "gkey")
-        .join(comp_min, "gcomp")
-        .select(
-            F.col("id").alias("doc_id"), F.col("comp_doc").alias("component")
-        )
-    )
+    ).select(F.col("id").alias("doc_id"), "component")
 
 
 def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,7 +778,12 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the recursive-CTE oracle) collapses through two exact
     integer aggregates — cluster grain, then size grain.
     """
-    comps = dedup_components_portable(spark, sf_dir)
+    return _cluster_size_histogram(dedup_components_portable(spark, sf_dir))
+
+
+def _cluster_size_histogram(comps: DataFrame) -> DataFrame:
+    """``(cluster_size, n_clusters, n_docs)`` over a (doc_id, component)
+    labeling: cluster grain, then size grain."""
     sizes = comps.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
@@ -895,16 +839,7 @@ def dedup_cluster_sizes_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     its marginal cost is trivially ≤ linear once the artifact exists).
     Output-identical to the exact entry (same oracle SQL certifies
     both; equivalence also locked in tests/test_graph_health.py)."""
-    comps = components_artifact(spark, sf_dir)
-    sizes = comps.groupBy("component").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cluster_size")
-    )
-    return sizes.groupBy("cluster_size").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_clusters"),
-        (F.count(F.lit(1)) * F.col("cluster_size"))
-        .cast("bigint")
-        .alias("n_docs"),
-    )
+    return _cluster_size_histogram(components_artifact(spark, sf_dir))
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

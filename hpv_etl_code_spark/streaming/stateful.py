@@ -446,8 +446,7 @@ def _make_cusum(k: int, h: int):
         # is bit-identical to the segmented batch fold by construction
         # (integer (max,+) has no reassociation seam at all). A NULL
         # value is counted, as the batch's count(*), and leaves s as it
-        # is, as the DuckDB oracle's SUM window does (cusum_segments
-        # differs there: its null-skipping greatest() resets s to 0)
+        # is, as the DuckDB oracle's SUM window and cusum_segments do
         n, s, mx = st
         cents = _cents_or_none(val)
         if cents is not None:

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hpv_etl_code_spark.operators.dedup import (
+    FAMILIES,
     exact_dedup_keepers,
     jaccard,
     minhash_lsh_pairs,
@@ -89,13 +90,13 @@ def test_chunked_hot_buckets_equal_unlimited(spark, sf_dir):
     chunked = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
-            d, "doc_id", "text", 0.8, max_bucket=50, hot_bucket_mode="chunk"
+            d, "doc_id", "text", 0.8, max_bucket=50
         ).collect()
     }
     unlimited = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
-            d, "doc_id", "text", 0.8, max_bucket=10_000_000, hot_bucket_mode="chunk"
+            d, "doc_id", "text", 0.8, max_bucket=10_000_000
         ).collect()
     }
     assert chunked == unlimited and chunked
@@ -103,13 +104,12 @@ def test_chunked_hot_buckets_equal_unlimited(spark, sf_dir):
 
 def test_grouped_collapse_equals_uncollapsed(spark, sf_dir):
     """The identical-tokset collapse (tokset_groups +
-    minhash_lsh_pairs_grouped) must reproduce the uncollapsed chunk-mode
-    output pair-for-pair INCLUDING est/jaccard values, at several
-    max_bucket settings (hot-classification is gn-weighted)."""
+    minhash_lsh_pairs_grouped) must reproduce the flat miner's output
+    pair-for-pair INCLUDING est/jaccard values, at several max_bucket
+    settings (hot-classification is gn-weighted)."""
     from pyspark.sql import functions as F
 
     from hpv_etl_code_spark.operators.dedup import (
-        minhash_lsh_pairs_from_base,
         minhash_lsh_pairs_grouped,
         minhash_signature,
         tokset_groups,
@@ -125,9 +125,7 @@ def test_grouped_collapse_equals_uncollapsed(spark, sf_dir):
     ).withColumn("sig", minhash_signature(F.col("toks"), 16))
     members, groups = tokset_groups(base)
     for mb in (10, 200, 10_000_000):
-        flat = minhash_lsh_pairs_from_base(
-            base, threshold=0.8, max_bucket=mb, hot_bucket_mode="chunk"
-        )
+        flat = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.8, max_bucket=mb)
         grouped = minhash_lsh_pairs_grouped(
             members, groups, threshold=0.8, max_bucket=mb
         )
@@ -167,17 +165,6 @@ def test_incremental_grouped_equals_flat_fast(spark, sf_dir):
     )
     rows = lambda df: {tuple(r) for r in df.collect()}
     assert rows(flat) == rows(grouped) and flat.count() > 0
-
-
-def test_drop_mode_discards_hot_buckets(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    dropped = minhash_lsh_pairs(
-        d, "doc_id", "text", 0.8, max_bucket=5, hot_bucket_mode="drop"
-    ).count()
-    chunked = minhash_lsh_pairs(
-        d, "doc_id", "text", 0.8, max_bucket=5, hot_bucket_mode="chunk"
-    ).count()
-    assert dropped < chunked  # dense corpus → most buckets are hot
 
 
 def test_simhash_identical_texts_collide(spark):
@@ -253,31 +240,6 @@ def test_incremental_dedup_fast_family_semantics(spark):
             new, corpus, "doc_id", "text", threshold=0.8, hash_family=fam
         )
         assert {r["id"] for r in out.collect()} == {11}, fam
-
-
-def test_incremental_dedup_bucket_cap_trades_recall_not_exactness(spark):
-    """With a cap of 0 every corpus bucket is 'hot' and near-dup
-    detection is disabled — but exact-fingerprint drops still fire."""
-    from hpv_etl_code_spark.operators.dedup import dedup_incremental_survivors
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon")], ["doc_id", "text"]
-    )
-    new = spark.createDataFrame(
-        [
-            (10, "alpha beta gamma delta epsilon"),  # exact dup
-            (11, "alpha beta gamma delta zeta"),  # near-dup (J=0.667<0.6? no: 4/6) — use θ=0.6
-        ],
-        ["doc_id", "text"],
-    )
-    uncapped = dedup_incremental_survivors(
-        new, corpus, "doc_id", "text", threshold=0.6
-    )
-    assert {r["id"] for r in uncapped.collect()} == set()  # both dropped
-    capped = dedup_incremental_survivors(
-        new, corpus, "doc_id", "text", threshold=0.6, max_corpus_bucket=0
-    )
-    assert {r["id"] for r in capped.collect()} == {11}  # near-dup survives
 
 
 def test_incremental_dedup_with_prebuilt_index_round_trip(spark, sf_dir, tmp_path):
@@ -402,7 +364,6 @@ def test_grouped_paths_match_flat_on_empty_toksets(spark, sf_dir):
 
     from hpv_etl_code_spark.operators.dedup import (
         incremental_survivors_grouped,
-        minhash_lsh_pairs_from_base,
         minhash_lsh_pairs_grouped,
         minhash_signature,
         tokset_groups,
@@ -423,8 +384,20 @@ def test_grouped_paths_match_flat_on_empty_toksets(spark, sf_dir):
         "sig", minhash_signature(F.col("toks"), 16)
     )
     members, groups = tokset_groups(base)
-    flat = minhash_lsh_pairs_from_base(
-        base, threshold=0.8, max_bucket=200, hot_bucket_mode="chunk"
+    # the flat miner over the same token sets: the injected ids take an
+    # empty token set through the ``tokens`` override
+    injected = F.col("doc_id") >= 9_000_001
+    flat = minhash_lsh_pairs(
+        d.unionByName(
+            empty.select(F.col("id").alias("doc_id"), F.lit("").alias("text"))
+        ),
+        "doc_id",
+        "text",
+        threshold=0.8,
+        max_bucket=200,
+        tokens=F.when(injected, F.array().cast("array<string>")).otherwise(
+            distinct_tokens("text")
+        ),
     )
     grouped = minhash_lsh_pairs_grouped(members, groups, threshold=0.8)
     rows = lambda df: {tuple(r) for r in df.collect()}
@@ -474,15 +447,13 @@ def test_portable_grouped_equals_flat(spark, sf_dir):
     and must exclude empty-tokset groups from the within fast path."""
     from pyspark.sql import functions as F
 
-    from hpv_etl_code_spark.operators.dedup import (
-        _portable_minhash_sig,
-        minhash_lsh_pairs_portable,
-        minhash_lsh_pairs_portable_grouped,
-    )
+    from hpv_etl_code_spark.operators.dedup import minhash_lsh_pairs_grouped
     from hpv_etl_code_spark.operators.textops import distinct_tokens
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    flat = minhash_lsh_pairs_portable(d, "doc_id", "text", threshold=0.8)
+    flat = minhash_lsh_pairs(
+        d, "doc_id", "text", threshold=0.8, hash_family="portable"
+    )
 
     keyed = d.select(
         F.col("doc_id").alias("id"), distinct_tokens("text").alias("toks")
@@ -492,8 +463,10 @@ def test_portable_grouped_equals_flat(spark, sf_dir):
     members = keyed.select("id", "gkey")
     pgroups = keyed.groupBy("gkey").agg(
         F.count(F.lit(1)).alias("gn"), F.first("toks").alias("toks")
-    ).withColumn("sig", _portable_minhash_sig("toks", 16))
-    grouped = minhash_lsh_pairs_portable_grouped(members, pgroups, threshold=0.8)
+    ).withColumn("sig", FAMILIES["portable"].signature("toks", 16))
+    grouped = minhash_lsh_pairs_grouped(
+        members, pgroups, threshold=0.8, hash_family="portable"
+    )
     rows = lambda df: {tuple(r) for r in df.collect()}
     assert rows(flat) == rows(grouped) and flat.count() > 0
 
@@ -509,14 +482,14 @@ def test_group_graph_components_equal_member_graph(spark, sf_dir):
     (dedup_minhash_portable) is a different banding by design."""
     import hpv_etl_code_spark.plans.text_queries as tq
     from hpv_etl_code_spark.operators.components import connected_components
-    from hpv_etl_code_spark.operators.dedup import minhash_lsh_pairs_portable
     from hpv_etl_code_spark.plans.shared_cache import corpus_lsh_params
 
     grouped = tq.dedup_components_portable(spark, sf_dir)
     nh, bands = corpus_lsh_params(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    member_pairs = minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, num_hashes=nh, bands=bands
+    member_pairs = minhash_lsh_pairs(
+        d, "doc_id", "text", threshold=0.8, num_hashes=nh, bands=bands,
+        hash_family="portable",
     )
     flat = connected_components(member_pairs, src="id_a", dst="id_b").select(
         F.col("id").alias("doc_id"), "component"
@@ -638,19 +611,16 @@ def test_shingles_expression(spark):
 
 
 def test_doomed_equals_pair_listing(spark, sf_dir):
-    """lsh_doomed_grouped / lsh_doomed_portable_grouped (round 9) must
-    equal ``pairs.select('id_b').distinct()`` of the corresponding
-    grouped pair miners — the group-minimum rule replaces the quadratic
+    """lsh_doomed_grouped (round 9, both hash families) must equal
+    ``pairs.select('id_b').distinct()`` of the corresponding grouped
+    pair miner — the group-minimum rule replaces the quadratic
     member-pair expansion output-identically, at several thresholds
     (cross-group doom paths only engage at lower thresholds)."""
     from hpv_etl_code_spark.operators.dedup import (
         lsh_doomed_grouped,
-        lsh_doomed_portable_grouped,
         minhash_lsh_pairs_grouped,
-        minhash_lsh_pairs_portable_grouped,
         minhash_signature,
         tokset_groups,
-        _portable_minhash_sig,
     )
 
     d = load_table(spark, sf_dir, "documents")
@@ -674,12 +644,40 @@ def test_doomed_equals_pair_listing(spark, sf_dir):
 
     pbase = d.select(
         F.col("doc_id").alias("id"), distinct_tokens("text").alias("toks")
-    ).withColumn("sig", _portable_minhash_sig("toks", 16))
+    ).withColumn("sig", FAMILIES["portable"].signature("toks", 16))
     pmembers, pgroups = tokset_groups(pbase)
     for thr in (0.5, 0.9):
-        ppairs = minhash_lsh_pairs_portable_grouped(
-            pmembers, pgroups, threshold=thr
+        ppairs = minhash_lsh_pairs_grouped(
+            pmembers, pgroups, threshold=thr, hash_family="portable"
         )
-        pdoomed = lsh_doomed_portable_grouped(pmembers, pgroups, threshold=thr)
+        pdoomed = lsh_doomed_grouped(
+            pmembers, pgroups, threshold=thr, hash_family="portable"
+        )
         pexpect = ids(ppairs.select("id_b").distinct(), "id_b")
         assert ids(pdoomed, "id") == pexpect and len(pexpect) > 0
+
+
+def test_portable_chunked_hot_buckets_equal_oracle(spark, sf_dir):
+    """Hot-bucket chunking is output-complete for the portable family
+    too: the flat portable miner with a ``max_bucket`` small enough to
+    split hot buckets must equal the DuckDB twin of the unchunked
+    (16, 4) banding."""
+    from hpv_etl_code_spark.plans.text_queries import _minhash_portable_sql
+    from tests.oracle_util import compare
+
+    d = load_table(spark, sf_dir, "documents")
+    fam = FAMILIES["portable"]
+    keys = F.array(*[F.struct(F.lit(b), fam.band_key(b, 4)) for b in range(4)])
+    hottest = (
+        fam.signed(d, F.col("doc_id"), distinct_tokens("text"), 16)
+        .select(F.explode(keys).alias("bucket"))
+        .groupBy("bucket")
+        .count()
+        .agg(F.max("count"))
+        .first()[0]
+    )
+    assert hottest > 2, "fixture must hold a bucket the cap splits"
+    pairs = minhash_lsh_pairs(
+        d, "doc_id", "text", threshold=0.8, max_bucket=2, hash_family="portable"
+    )
+    compare(pairs, _minhash_portable_sql(16, 4), sf_dir)

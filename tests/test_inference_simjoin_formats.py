@@ -283,6 +283,38 @@ def test_cusum_chunk_invariance_and_reference(spark, sf_dir):
         assert base[uid][1] == s and base[uid][2] == mx, uid
 
 
+def test_cusum_null_value_matches_oracle(spark, tmp_path):
+    """A NULL value leaves the CUSUM unchanged, as the oracle's
+    NULL-skipping running SUM does (user 1: 5.0, NULL, 1.0), and a user
+    whose values are all NULL ends with NULL statistics (user 3)."""
+    import datetime as dt
+
+    import duckdb
+
+    from hpv_etl_code_spark.plans.inference_queries import (
+        CUSUM_SQL,
+        cusum_user_cents,
+    )
+
+    def at(h):
+        return dt.datetime(2024, 3, 1, h)
+
+    rows = [
+        (1, 1, at(9), 5.0), (2, 1, at(10), None), (3, 1, at(11), 1.0),
+        (4, 2, at(9), 2.0), (5, 2, at(10), 2.0),
+        (6, 3, at(9), None), (7, 3, at(10), None),
+    ]
+    out = str(tmp_path / "events.parquet")
+    spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    ).coalesce(1).write.parquet(out)
+    got = {tuple(r) for r in cusum_user_cents(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{out}/*.parquet'")
+    want = set(con.sql(CUSUM_SQL).fetchall())
+    assert got == want, (got, want)
+
+
 def test_cusum_long_key_single_chunk_memory_shape(spark):
     """A 20k-event key folds correctly through 32-wide chunks (the
     long-tail-entity guard: per-task state is bounded by the chunk,

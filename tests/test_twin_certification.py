@@ -61,19 +61,20 @@ from hpv_etl_code_spark.sources.registry import load_table
 def test_fast_lsh_machinery_reproduces_portable_output(spark, sf_dir):
     """minhash_lsh_pairs_grouped (the dedup_minhash_lsh machinery) fed
     md5 signatures + string toksets must equal the oracle-certified
-    minhash_lsh_pairs_portable at the same scaled parameters —
+    portable flat miner at the same scaled parameters —
     including the rounded jaccard values."""
     from hpv_etl_code_spark.operators.dedup import (
-        _portable_minhash_sig,
+        FAMILIES,
+        minhash_lsh_pairs,
         minhash_lsh_pairs_grouped,
-        minhash_lsh_pairs_portable,
     )
     from hpv_etl_code_spark.plans.shared_cache import corpus_lsh_params
 
     nh, bands = corpus_lsh_params(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    portable = minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, num_hashes=nh, bands=bands
+    portable = minhash_lsh_pairs(
+        d, "doc_id", "text", threshold=0.8, num_hashes=nh, bands=bands,
+        hash_family="portable",
     ).select("id_a", "id_b", "jaccard")
 
     keyed = d.select(
@@ -83,7 +84,7 @@ def test_fast_lsh_machinery_reproduces_portable_output(spark, sf_dir):
     groups = (
         keyed.groupBy("gkey")
         .agg(F.count(F.lit(1)).alias("gn"), F.first("toks").alias("toks"))
-        .withColumn("sig", _portable_minhash_sig("toks", nh))
+        .withColumn("sig", FAMILIES["portable"].signature("toks", nh))
     )
     fast_machinery = minhash_lsh_pairs_grouped(
         members,
@@ -228,26 +229,27 @@ def test_simhash_banding_is_lossless_vs_brute_force(spark, sf_dir):
 def test_fast_shingle_machinery_reproduces_portable_output(spark, sf_dir):
     """dedup_shingles_fast's machinery (xxhash64 shingles, grouped
     collapse, scaled banding) fed the PORTABLE md5 signatures over the
-    SAME string shingles must equal minhash_lsh_pairs_portable with
+    SAME string shingles must equal the portable flat miner with
     shingle tokens at the same parameters — the shingle analog of the
     unigram machinery pin."""
     from hpv_etl_code_spark.operators.dedup import (
-        _portable_minhash_sig,
+        FAMILIES,
+        minhash_lsh_pairs,
         minhash_lsh_pairs_grouped,
-        minhash_lsh_pairs_portable,
     )
     from hpv_etl_code_spark.operators.textops import shingles
     from hpv_etl_code_spark.plans.shared_cache import corpus_lsh_params
 
     nh, bands = corpus_lsh_params(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    portable = minhash_lsh_pairs_portable(
+    portable = minhash_lsh_pairs(
         d,
         "doc_id",
         "text",
         threshold=0.8,
         num_hashes=nh,
         bands=bands,
+        hash_family="portable",
         tokens=shingles("text", 3),
     ).select("id_a", "id_b", "jaccard")
 
@@ -258,7 +260,7 @@ def test_fast_shingle_machinery_reproduces_portable_output(spark, sf_dir):
     groups = (
         keyed.groupBy("gkey")
         .agg(F.count(F.lit(1)).alias("gn"), F.first("toks").alias("toks"))
-        .withColumn("sig", _portable_minhash_sig("toks", nh))
+        .withColumn("sig", FAMILIES["portable"].signature("toks", nh))
     )
     fast_machinery = minhash_lsh_pairs_grouped(
         members,
